@@ -314,17 +314,8 @@ object Dedup {
         .observe(obs, sum(when(col("cluster") === col("__old"), 0L)
           .otherwise(1L)).as("__changed"))
         .localCheckpoint(eager = true)
-      // the metric is delivered asynchronously on the listener bus —
-      // usually within a few ms of the checkpoint action, but a busy bus
-      // can lag unboundedly, so poll briefly and fall back to the (cheap)
-      // structural probe rather than stalling the round
-      val fut = obs.future
-      val deadline = System.nanoTime() + 100L * 1000 * 1000
-      while (!fut.isCompleted && System.nanoTime() < deadline) Thread.sleep(2)
-      converged = fut.value.flatMap(_.toOption) match {
-        case Some(r) => r.isNullAt(0) || r.getLong(0) == 0L
-        case None => next.filter(col("cluster") =!= col("__old")).isEmpty
-      }
+      converged = Observations.observedLong(obs,
+        if (next.filter(col("cluster") =!= col("__old")).isEmpty) 0L else 1L) == 0L
       labels = next.drop("__old")
       it += 1
     }

@@ -283,17 +283,21 @@ object Knn {
           .observe(obs, sum(when($"__done" && $"rank" === 1, 1L)
             .otherwise(0L)).as("__ndone"))
           .localCheckpoint(eager = true)
-        val nDone = observedLong(obs,
+        val nDone = Observations.observedLong(obs,
           topk.filter($"__done" && $"rank" === 1).count())
         if (nDone > 0) {
           parts += finished(topk)
           nActive -= nDone
-          if (nActive > 0)
-            remaining = remaining.join(
-              broadcast(topk.filter($"__done" && $"rank" === 1)
-                .select($"qid")),
-              Seq("qid"), "left_anti")
-              .localCheckpoint(eager = true)
+          // every active query retired: drop the set outright, or the
+          // next activation would union the retired qids back in
+          remaining =
+            if (nActive > 0)
+              remaining.join(
+                broadcast(topk.filter($"__done" && $"rank" === 1)
+                  .select($"qid")),
+                Seq("qid"), "left_anti")
+                .localCheckpoint(eager = true)
+            else null
         }
         if (onRound != null) onRound(round, level, nDone)
         if (finalRound) done = true
@@ -311,20 +315,6 @@ object Knn {
       finished(roundTopk(bare, levels.max, radius,
         finalRound = false)).limit(0)
     else parts.reduce(_ unionByName _)
-  }
-
-  /** Read an observed long metric, polling briefly (the listener bus can
-    * lag under load) and falling back to the supplied probe — the same
-    * discipline as [[Dedup.dupClusters]]'s convergence metric. */
-  private def observedLong(obs: org.apache.spark.sql.Observation,
-                           fallback: => Long): Long = {
-    val fut = obs.future
-    val deadline = System.nanoTime() + 100L * 1000 * 1000
-    while (!fut.isCompleted && System.nanoTime() < deadline) Thread.sleep(2)
-    fut.value.flatMap(_.toOption) match {
-      case Some(r) => if (r.isNullAt(0)) 0L else r.getLong(0)
-      case None => fallback
-    }
   }
 
   /** The distributed kNN join. @param queries df with qid, qlon, qlat.
@@ -410,7 +400,7 @@ object Knn {
         .observe(obs, sum(when($"__done" && $"rank" === 1, 1L)
           .otherwise(0L)).as("__ndone"))
         .localCheckpoint(eager = true)
-      val nDone = observedLong(obs,
+      val nDone = Observations.observedLong(obs,
         topk.filter($"__done" && $"rank" === 1).count())
       if (nDone > 0) {
         parts += finished(topk)

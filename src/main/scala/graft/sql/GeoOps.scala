@@ -1,7 +1,9 @@
 package graft.sql
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core._
@@ -745,27 +747,64 @@ object GeoOps {
     * with identical (baseObject, offset, size) for different contents
     * (UnsafeRowSerializer's shared rowBuffer on shuffle reads, codegen
     * BufferHolder reuse), so an identity-keyed cache can serve a stale
-    * polygon. Here the key is the row's Murmur3 byte hash and every hit is
-    * verified by a full byte compare against a defensively-copied row —
-    * a stale or colliding entry can only miss, never produce wrong data. */
-  private final class CachedGeom(val row: org.apache.spark.sql.catalyst.expressions.UnsafeRow,
-                                 val geom: Geom)
+    * polygon. The key ([[cacheKey]]) reads a bounded part of the content
+    * — a whole-row hash per candidate pair costs about 20x the ray cast —
+    * so distinct rows may share a key: they sit side by side in one
+    * bucket, and every hit is verified by a full byte compare against a
+    * defensively-copied row. A stale or colliding entry can only miss,
+    * never produce wrong data. */
+  private final class CachedGeom(val row: UnsafeRow, val geom: Geom, val next: CachedGeom)
+
+  private final class PolyCache {
+    val buckets = new java.util.HashMap[java.lang.Long, CachedGeom]
+    var entries = 0
+  }
+
+  private val MaxCachedGeoms = 4096
+  private val FixedRegionBytes =
+    UnsafeRow.calculateBitSetWidthInBytes(GeoStruct.dataType.length) + 8 * GeoStruct.dataType.length
+  private val KeyCoordBytes = 64
 
   private val polyCache =
-    new ThreadLocal[java.util.HashMap[Integer, CachedGeom]] {
-      override def initialValue() = new java.util.HashMap
+    new ThreadLocal[PolyCache] {
+      override def initialValue() = new PolyCache
     }
 
+  /** Decode-cache key of a geometry row, O(1) in the row size: the size,
+    * then a Murmur3 hash of the fixed-width region (type, dims, srid and
+    * every array's offset and length, so the vertex and ring counts) and of
+    * the first eight coordinate values. The coordinate array's null bitset
+    * is skipped, so the coordinates are part of the key at any vertex
+    * count. */
+  private[sql] def cacheKey(u: UnsafeRow): Long = {
+    val size = u.getSizeInBytes
+    var h = Murmur3_x86_32.hashUnsafeWords(u.getBaseObject, u.getBaseOffset,
+      math.min(size, FixedRegionBytes), 42)
+    if (!u.isNullAt(3)) {
+      val c = u.getArray(3)
+      val header = UnsafeArrayData.calculateHeaderPortionInBytes(c.numElements())
+      val n = math.min(c.getSizeInBytes - header, KeyCoordBytes)
+      if (n > 0)
+        h = Murmur3_x86_32.hashUnsafeWords(c.getBaseObject, c.getBaseOffset + header, n, h)
+    }
+    (size.toLong << 32) | (h & 0xffffffffL)
+  }
+
   private def decodeCached(poly: InternalRow): Geom = poly match {
-    case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
+    case u: UnsafeRow =>
       val cache = polyCache.get()
-      val key = Integer.valueOf(u.hashCode()) // Murmur3 over the row bytes
-      val hit = cache.get(key)
-      if (hit != null && hit.row.equals(u)) hit.geom // byte-exact verify
+      val key = java.lang.Long.valueOf(cacheKey(u))
+      var e = cache.buckets.get(key)
+      while (e != null && !e.row.equals(u)) e = e.next // byte-exact verify
+      if (e != null) e.geom
       else {
         val g = GeoStruct.decode(u)
-        if (cache.size > 4096) cache.clear()
-        cache.put(key, new CachedGeom(u.copy(), g))
+        if (cache.entries >= MaxCachedGeoms) {
+          cache.buckets.clear()
+          cache.entries = 0
+        }
+        cache.buckets.put(key, new CachedGeom(u.copy(), g, cache.buckets.get(key)))
+        cache.entries += 1
         g
       }
     case r => GeoStruct.decode(r)

@@ -301,6 +301,35 @@ class OperatorSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
+  test("adaptive kNN: exactly k rows per query when a round retires every active query") {
+    // the town queries enter at a fine level and all retire before the
+    // loop reaches the empty-ocean queries' coarse entry level; the retired
+    // ones must not re-enter with them
+    val town = (0 until 2000).map { i =>
+      val h = GeoOps.splitmix64(77L + i)
+      (i.toLong, 10.0 + java.lang.Long.remainderUnsigned(h, 10000L) / 10000.0,
+        50.0 + java.lang.Long.remainderUnsigned(
+          java.lang.Long.divideUnsigned(h, 10000L), 10000L) / 10000.0)
+    }
+    val pts = town ++ randPoints(200, 5L).map { case (i, lon, lat) => (3000L + i, lon, lat) }
+      .filter { case (_, lon, lat) => lon > 0.0 || lat > 0.0 }
+    val qs = Seq((1L, 10.3, 50.3), (2L, 10.7, 50.6), (3L, -120.0, -30.0), (4L, -60.0, -40.0))
+    val k = 4
+    val got = Knn.knnMetersJoinAdaptive(pts.toDF("pid", "lon", "lat"),
+        qs.toDF("qid", "qlon", "qlat"), k, tieCols = Seq("pid"))
+      .select("qid", "rank", "pid").as[(Long, Int, Long)].collect()
+    assert(got.map(t => (t._1, t._2)).distinct.length == got.length,
+      s"duplicate (qid, rank) rows: ${got.toSeq.sorted}")
+    assert(got.groupBy(_._1).map { case (q, rs) => q -> rs.length } ==
+      qs.map(_._1 -> k).toMap)
+    val expected = qs.flatMap { case (qid, qlon, qlat) =>
+      pts.map { case (pid, lon, lat) =>
+        (graft.core.Measure.haversineMeters(lon, lat, qlon, qlat), pid)
+      }.sorted.take(k).zipWithIndex.map { case ((_, pid), i) => (qid, i + 1, pid) }
+    }
+    assert(got.toSet == expected.toSet)
+  }
+
   test("dropBoilerplateLines strips frequent lines, keeps order") {
     val docs = Seq(
       (1L, "HEADER\nreal content one\nFOOTER"),
