@@ -23,16 +23,9 @@ import graft.operators.Dissolve
 object DissolveBench {
 
   private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-dissolve-bench")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("DISSOLVE_BENCH_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = LocalSpark.session(cores, "graft-dissolve-bench")
+    s.conf.set("spark.sql.adaptive.enabled",
+      sys.env.getOrElse("DISSOLVE_BENCH_AQE", "true"))
     graft.sql.Geo.register(s)
     s
   }

@@ -14,18 +14,8 @@ import graft.sources.ImagesTable
   * pairs, and the scaling efficiency. Results feed SCALING.md. */
 object JoinBench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-join-bench")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(cores: Int): SparkSession =
+    LocalSpark.session(cores, "graft-join-bench")
 
   def main(args: Array[String]): Unit = {
     if (sys.env.get("JOIN_BENCH_MODE").contains("kmeans")) return kmeansMain()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Knn
@@ -15,24 +14,11 @@ import graft.sources.ImagesTable
   * uniformly-coarse start would cost. Results feed SCALING.md. */
 object KnnBench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-knn-bench")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val nPts = sys.env.getOrElse("KNN_BENCH_POINTS", "4000000").toLong
     val nQ = sys.env.getOrElse("KNN_BENCH_QUERIES", "100000").toLong
-    val spark = session(cpus)
+    val spark = LocalSpark.session(cpus, "graft-knn-bench")
 
     // ---- input (materialized once; synthesis excluded from timing)
     val ptsPath = s"target/knn_bench_pts_$nPts"

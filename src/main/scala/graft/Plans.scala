@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ann, Dedup, SpatialJoins}
@@ -15,12 +15,8 @@ import graft.sql.Geo
   * build contract asks for). Run: `sbt "runMain graft.Plans"`. */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSpark.session(4, "graft-plans")
+    spark.conf.set("spark.sql.shuffle.partitions", 8)
     Geo.register(spark)
 
     val images = ImagesTable.generate(spark, 10000L)

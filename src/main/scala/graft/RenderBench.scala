@@ -12,18 +12,8 @@ import graft.sources.ImagesTable
   * and the scaling efficiency. Results feed SCALING.md. */
 object RenderBench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-render-bench")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(cores: Int): SparkSession =
+    LocalSpark.session(cores, "graft-render-bench")
 
   def main(args: Array[String]): Unit = {
     if (sys.env.get("RENDER_BENCH_MODE").contains("poly")) return polyMain()

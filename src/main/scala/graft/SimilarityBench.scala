@@ -22,18 +22,8 @@ import graft.operators.{Dedup, SpatialJoins}
   * efficiency. Results feed SCALING.md. */
 object SimilarityBench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-similarity-bench")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private def session(cores: Int): SparkSession =
+    LocalSpark.session(cores, "graft-similarity-bench")
 
   def main(args: Array[String]): Unit = {
     val mode = sys.env.getOrElse("SIM_BENCH_MODE", "hausdorff")

@@ -52,24 +52,12 @@ object Pipeline {
       filesPerBucket: Int): (DataFrame, DataFrame) = {
     val spark = df.sparkSession
     val data = df.withColumn("snapshot_id", lit(snapshotId))
-    // co-locate each bucket before the dynamic-partition write: without
-    // this every task writes a file per bucket it happens to hold
-    // (tasks x buckets tiny files — a small-file explosion at scale);
-    // with it the file count is bounded by bucket count x filesPerBucket.
-    // filesPerBucket > 1 salts hot buckets across that many writer tasks —
-    // at 100 TB a dense world region lands in one bucket, and a single
-    // writer task for it would be the straggler.
-    val parted =
-      if (filesPerBucket > 1)
-        data.repartition(col("bucket"),
-          pmod(hash(data.columns.map(col): _*), lit(filesPerBucket)))
-      else data.repartition(col("bucket"))
     // snapshot_id leads the partition spec so each snapshot owns its own
     // directory subtree: the manifest read-back below and `readSnapshot`
     // prune at the directory level (PartitionFilters) instead of opening
     // every file in table history — manifesting snapshot N must stay O(N's
     // output), not O(table history).
-    parted
+    byBucket(data, filesPerBucket)
       .write.mode(SaveMode.Append).partitionBy("snapshot_id", "bucket")
       .parquet(s"$tableDir/data")
     // read the just-written snapshot's own subtree, not the table root: a
@@ -87,6 +75,19 @@ object Pipeline {
       s"""{"snapshot_id":$snapshotId,"ts":${System.currentTimeMillis()}}""")
     (manifest, written)
   }
+
+  /** Co-locate each bucket before a dynamic-partition write: without this
+    * every task writes a file per bucket it happens to hold (tasks x
+    * buckets tiny files — a small-file explosion at scale); with it the
+    * file count is bounded by bucket count x filesPerBucket.
+    * filesPerBucket > 1 salts hot buckets across that many writer tasks —
+    * at 100 TB a dense world region lands in one bucket, and a single
+    * writer task for it would be the straggler. */
+  private def byBucket(df: DataFrame, filesPerBucket: Int): DataFrame =
+    if (filesPerBucket > 1)
+      df.repartition(col("bucket"),
+        pmod(hash(df.columns.map(col): _*), lit(filesPerBucket)))
+    else df.repartition(col("bucket"))
 
   /** Per-bucket lineage row (rows, bytes, key range) over already-written
     * snapshot data — shared by `writeSnapshot` and the compaction rebuild. */
@@ -243,15 +244,23 @@ object Pipeline {
       .filter(col("snapshot_id") <= asOf)
     val delPath = Paths.get(tableDir, "deletes")
     if (!Files.exists(delPath)) data
-    else {
-      val dels = spark.read.parquet(delPath.toString)
-        .filter(col("delete_snapshot") <= asOf)
-      data.join(dels,
-        data(keyCol).cast("string") === dels("del_key") &&
-          dels("delete_snapshot") > data("snapshot_id"),
-        "left_anti")
-    }
+    else dropTombstoned(data, tombstones(spark, delPath.toString, asOf), keyCol)
   }
+
+  /** Tombstones committed at or below snapshot `upTo`. */
+  private def tombstones(spark: SparkSession, delDir: String,
+                         upTo: Long): DataFrame =
+    spark.read.parquet(delDir).filter(col("delete_snapshot") <= upTo)
+
+  /** The rows of `rows` that no strictly newer tombstone of `dels` masks
+    * (keys compare as strings) — the merge-on-read anti-join shared by
+    * `readCurrent` and the compaction rewrite. */
+  private def dropTombstoned(rows: DataFrame, dels: DataFrame,
+                             keyCol: String): DataFrame =
+    rows.join(dels,
+      rows(keyCol).cast("string") === dels("del_key") &&
+        dels("delete_snapshot") > rows("snapshot_id"),
+      "left_anti")
 
   /** Spatial data skipping: buckets are z/x/y tiles, so the partition value
     * itself knows which part of the world each partition covers. The tile-
@@ -318,27 +327,15 @@ object Pipeline {
       .filter(col("snapshot_id") <= upToSnapshotId)
       .withColumn("bucket", col("bucket").cast("long"))
     val tombstonesApplied = F.exists(delDir) &&
-      spark.read.parquet(delDir.toString)
-        .filter(col("delete_snapshot") <= upToSnapshotId)
-        .limit(1).count() > 0
+      tombstones(spark, delDir.toString, upToSnapshotId).limit(1).count() > 0
     val applied =
       if (!tombstonesApplied) raw
-      else {
-        val dels = spark.read.parquet(delDir.toString)
-          .filter(col("delete_snapshot") <= upToSnapshotId)
-        raw.join(dels,
-          raw(keyCol).cast("string") === dels("del_key") &&
-            dels("delete_snapshot") > raw("snapshot_id"),
-          "left_anti")
-      }
+      else dropTombstoned(raw,
+        tombstones(spark, delDir.toString, upToSnapshotId), keyCol)
     val base = applied.drop("snapshot_id")
     val tmp = Paths.get(tableDir, s"compact_tmp_$upToSnapshotId")
-    val parted =
-      if (filesPerBucket > 1)
-        base.repartition(col("bucket"),
-          pmod(hash(base.columns.map(col): _*), lit(filesPerBucket)))
-      else base.repartition(col("bucket"))
-    parted.write.mode(SaveMode.Overwrite).partitionBy("bucket")
+    byBucket(base, filesPerBucket)
+      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .parquet(tmp.toString)
     // 2. swap, delete-last: rename the expired snapshot directories ASIDE
     // (into a staging dir outside the scan root), move the compacted

@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: run each oracle SQL in
 DuckDB against the sf parquet tables, compare with the Verify parquet dump
-(rows, schema kinds, sorted-by-column-name value hash)."""
+(rows, schema kinds, sorted-by-column-name value hash). An oracle query with
+no dump directory counts as MISSING and fails; run Verify into a fresh
+output directory so an earlier run's dump cannot stand in for a failed query.
+
+Usage: python3 tools/check_oracle.py <sf_dir> <verify_out_dir>"""
 import sys, json, glob, hashlib
 import duckdb
 
@@ -30,6 +34,11 @@ def table_hash(cols, rows):
     return h.hexdigest()
 
 ok = fail = 0
+# a query that threw before Verify wrote its dump has no directory at all:
+# it must count as a failure, not vanish from the tally
+dumped = {d.split("/")[-1] for d in glob.glob(f"{out_dir}/q*")}
+for qname in sorted(set(oracle) - dumped):
+    print(f"{qname}: MISSING (no dump directory)"); fail += 1
 for name in sorted(glob.glob(f"{out_dir}/q*")):
     qname = name.split("/")[-1]
     try:
