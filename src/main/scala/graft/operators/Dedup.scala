@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.FilterPin
 import graft.sql.Geo
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -348,14 +349,12 @@ object Dedup {
       if (!normalize) col(textCol)
       else trim(regexp_replace(regexp_replace(lower(col(textCol)),
         lit("[\\p{Punct}]"), lit(" ")), lit("\\s+"), lit(" ")))
-    // the always-false nondeterministic disjunct pins the size filter
-    // ABOVE the tokenization project: pushdown would otherwise inline the
-    // whole normalize+split chain into a Filter below it, running the
-    // regexes twice per row (r06; partition ids are never negative, and a
-    // filter on a derived column can never reach PushedFilters anyway)
+    // the size filter is pinned (r06) to keep the normalize+split chain
+    // out of it; a pin does not hold above the tokenization project, so
+    // the chain is inlined anyway
     def grams(df: DataFrame): DataFrame = df
       .withColumn("__t", split(textExpr, " "))
-      .filter(size(col("__t")) >= n || spark_partition_id() < 0)
+      .filter(FilterPin(size(col("__t")) >= n))
       .select(col(idCol), explode(expr(
         s"transform(sequence(0, size(__t) - $n), " +
           s"i -> md5(concat_ws(' ', slice(__t, i + 1, $n))))")).as("gram"))

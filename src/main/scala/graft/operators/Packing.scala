@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.FilterPin
 import graft.sql.Geo
 
 /** Training-sequence packing: assign each document to a fixed-budget
@@ -56,11 +57,9 @@ object Packing {
     df
       .withColumn("__toks", toks)
       .withColumn("__n", size(col("__toks")))
-      // nondeterministic disjunct: keeps the filter above the tokenize
-      // project (pushdown would inline the split+filter chain into a
-      // second per-row evaluation; derived-column filters never reach
-      // PushedFilters, so nothing is lost at the scan — r06)
-      .where(col("__n") > 0 || spark_partition_id() < 0)
+      // pinned (r06) to keep the split+filter chain out of the filter; a
+      // pin does not hold above the tokenize project, so it is inlined
+      .where(FilterPin(col("__n") > 0))
       .select(col("*"), posexplode(expr(
         s"transform(sequence(0, CAST(ceil(__n / $maxTokens.0D) AS INT) - 1), " +
           s"i -> array_join(slice(__toks, i * $maxTokens + 1, $maxTokens), ' '))"))

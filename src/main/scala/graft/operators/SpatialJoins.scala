@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.plans.FilterPin
 import graft.sql.Geo
 
 /** Spatial join operators (SURVEY.md §2C): point-in-polygon via cell-cover
@@ -134,19 +135,15 @@ object SpatialJoins {
           env("xmax") + d, env("ymax") + d)),
         lit(zoom))
     }
-    // the nondeterministic disjunct keeps the emptiness filter at this
-    // altitude: when the geometry is itself computed upstream (tracks,
-    // buffers), pushdown would inline that whole construction into a
-    // second per-row Filter evaluation (r06; derived-geometry predicates
-    // never reach PushedFilters, so the scan loses nothing)
+    // emptiness filters pinned (r06) to keep an upstream geometry
+    // construction (tracks, buffers) out of the filter; a pin does not
+    // hold above a projection, so a projected geometry is inlined anyway
     val l = left
-      .where(!call_function("st_isempty", col(leftGeomCol)) ||
-        spark_partition_id() < 0)
+      .where(FilterPin(!call_function("st_isempty", col(leftGeomCol))))
       .withColumn("__lcover", coverExpanded(col(leftGeomCol), maxDist))
       .withColumn("__jtile", explode(col("__lcover")))
     val r0 = right
-      .where(!call_function("st_isempty", col(rightGeomCol)) ||
-        spark_partition_id() < 0)
+      .where(FilterPin(!call_function("st_isempty", col(rightGeomCol))))
       .withColumn("__rcover", coverExpanded(col(rightGeomCol), 0.0))
       .withColumn("__rtile", explode(col("__rcover")))
     val r = if (broadcastRight) broadcast(r0) else r0

@@ -21,14 +21,11 @@ import graft.sql.GeoOps
   *
   * Fires only when the join has no existing cross-side equality (anything
   * hash-joinable is left alone), which also makes the rewrite fixpoint-safe.
-  * Zoom comes from `graft.containsJoin.zoom` (default 7).
+  * Tiles are zoom 7.
   */
 object ContainsJoinRewrite extends Rule[LogicalPlan] {
 
-  private def zoom: Int =
-    try org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("graft.containsJoin.zoom", "7").toInt
-    catch { case _: Exception => 7 }
+  private val Zoom = 7
 
   private def isGeoCall(e: Expression, name: String): Option[StaticInvoke] =
     e match {
@@ -69,13 +66,12 @@ object ContainsJoinRewrite extends Rule[LogicalPlan] {
   private def tryRewrite(c: Expression, j: Join, left: LogicalPlan,
                          right: LogicalPlan, cond: Expression,
                          hint: JoinHint): Option[LogicalPlan] = {
-    val z = zoom
     val (polyExpr, ptTileOf): (Expression, () => Expression) =
       isGeoCall(c, "contains") match {
         case Some(si) =>
           val Seq(poly, pt) = si.arguments.take(2)
           (poly, () => StaticInvoke(GeoOps.getClass, LongType, "tileOfGeom",
-            Seq(pt, Literal(z)),
+            Seq(pt, Literal(Zoom)),
             inputTypes = Seq(graft.sql.GeoStruct.dataType,
               org.apache.spark.sql.types.IntegerType),
             propagateNull = true, returnNullable = false))
@@ -83,7 +79,7 @@ object ContainsJoinRewrite extends Rule[LogicalPlan] {
           case Some(si) =>
             val Seq(poly, x, y) = si.arguments.take(3)
             (poly, () => StaticInvoke(GeoOps.getClass, LongType, "tileId",
-              Seq(x, y, Literal(z)),
+              Seq(x, y, Literal(Zoom)),
               inputTypes = Seq(org.apache.spark.sql.types.DoubleType,
                 org.apache.spark.sql.types.DoubleType,
                 org.apache.spark.sql.types.IntegerType),
@@ -105,7 +101,7 @@ object ContainsJoinRewrite extends Rule[LogicalPlan] {
     val ptProj = Project(ptSide.output :+ ptTileAlias, ptSide)
     val coverExpr = StaticInvoke(GeoOps.getClass,
       ArrayType(LongType, containsNull = false), "tileCover",
-      Seq(polyExpr, Literal(z)),
+      Seq(polyExpr, Literal(Zoom)),
       inputTypes = Seq(graft.sql.GeoStruct.dataType,
         org.apache.spark.sql.types.IntegerType),
       propagateNull = true, returnNullable = false)

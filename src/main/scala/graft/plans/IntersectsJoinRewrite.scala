@@ -22,14 +22,11 @@ import graft.sql.GeoOps
   *
   * Fires only when the join has no existing cross-side equality (anything
   * hash-joinable is left alone), which also makes the rewrite
-  * fixpoint-safe. Zoom comes from `graft.intersectsJoin.zoom` (default 6).
+  * fixpoint-safe. Tiles are zoom 6.
   */
 object IntersectsJoinRewrite extends Rule[LogicalPlan] {
 
-  private def zoom: Int =
-    try org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("graft.intersectsJoin.zoom", "6").toInt
-    catch { case _: Exception => 6 }
+  private val Zoom = 6
 
   private def isIntersects(e: Expression): Option[StaticInvoke] = e match {
     case si: StaticInvoke
@@ -84,10 +81,9 @@ object IntersectsJoinRewrite extends Rule[LogicalPlan] {
         ga.references.subsetOf(right.outputSet)) (gb, ga)
       else return None
 
-    val z = zoom
     def sideWithCover(side: LogicalPlan, g: Expression, tag: String)
         : (LogicalPlan, Attribute, Attribute) = {
-      val coverAlias = Alias(coverOf(g, z), s"__${tag}cover")()
+      val coverAlias = Alias(coverOf(g, Zoom), s"__${tag}cover")()
       val proj = Project(side.output :+ coverAlias, side)
       val tileAttr =
         AttributeReference(s"__${tag}tile", LongType, nullable = false)()

@@ -1,5 +1,7 @@
 package graft.plans
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Repartition}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -175,5 +177,28 @@ class PlanSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assertGroupLimited(proj, "Ann.projectedTopK")
     assert(proj.linesIterator.count(_.contains("WindowGroupLimit")) >= 2, proj)
+  }
+
+  test("FilterPin keeps a derived-column filter above the repartition") {
+    val derived = spark.range(0, 1000).repartition(4)
+      .withColumn("d", col("id") * 7 % 10)
+    def optimized(pred: Column): LogicalPlan =
+      derived.filter(pred).queryExecution.optimizedPlan
+    def filterOnRepartition(plan: LogicalPlan): Boolean = plan.exists {
+      case f: Filter => f.child.isInstanceOf[Repartition]
+      case _ => false
+    }
+    def filterUnderRepartition(plan: LogicalPlan): Boolean = plan.exists {
+      case r: Repartition => r.child.isInstanceOf[Filter]
+      case _ => false
+    }
+    // pinned, the Filter sits on the Repartition: above the exchange, but
+    // below the Project that defines `d`, with `d` inlined
+    val pinned = optimized(FilterPin(col("d") > 2))
+    assert(filterOnRepartition(pinned) && !filterUnderRepartition(pinned), pinned)
+    // control: unpinned, the same filter sinks below the repartition
+    val unpinned = optimized(col("d") > 2)
+    assert(filterUnderRepartition(unpinned) && !filterOnRepartition(unpinned),
+      unpinned)
   }
 }
