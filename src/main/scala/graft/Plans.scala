@@ -50,7 +50,7 @@ object Plans {
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         p
       },
-      "ContainsJoinRewrite: naive st_contains join auto-indexed (no join " +
+      "SpatialJoinRewrite, contains: naive st_contains join auto-indexed (no join " +
         "keys written by the user; the rule injects the tile-cover equi-join)" ->
         fmt(imagesPq.join(polys, call_function("st_containsxy",
           col("poly"), col("lon"), col("lat")))
@@ -60,7 +60,7 @@ object Plans {
           spark.range(100).select(col("id").as("doc_id"),
             concat(lit("text of doc "), col("id")).as("text")),
           "text", "doc_id")),
-      "DWithinJoinRewrite: naive st_dwithinxy join auto-indexed (grid " +
+      "SpatialJoinRewrite, dwithin: naive st_dwithinxy join auto-indexed (grid " +
         "cell equi-join + 3x3 ring explode on the small side)" ->
         fmt(imagesPq.join(
           spark.range(20).select(col("id").as("qid"),

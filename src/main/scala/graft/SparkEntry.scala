@@ -34,7 +34,7 @@ object SparkEntry {
   private val prepped = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, String]())
 
-  private def prep(spark: SparkSession, dir: String): Unit = {
+  private[graft] def prep(spark: SparkSession, dir: String): Unit = {
     Geo.register(spark)
     if (dir == prepped.get(spark)) return
     Tables.foreach { t =>
@@ -704,7 +704,7 @@ object SparkEntry {
         |GROUP BY qid ORDER BY qid""".stripMargin)),
     QuerySpec("q58_dwithin_rewrite", { s =>
       // the naive formulation a user would write — just the st_dwithinxy
-      // predicate, no join keys. DWithinJoinRewrite turns it into the grid
+      // predicate, no join keys. SpatialJoinRewrite turns it into the grid
       // equi-join (same plan as q28's hand-built path); the oracle is the
       // brute-force distance filter
       val pts = s.sql(ptsCteOn("lineitem_par"))
@@ -4366,7 +4366,7 @@ object SparkEntry {
          |ORDER BY k, idx""".stripMargin)),
     QuerySpec("q121_intersects_rewrite", { s =>
       // the naive geometry-geometry formulation a user would write — just
-      // st_intersects, no join keys. IntersectsJoinRewrite turns it into
+      // st_intersects, no join keys. SpatialJoinRewrite turns it into
       // the cover equi-join with the exactly-once min-shared-tile claim
       // (same plan family as q117's hand-built operator); the oracle is
       // the identical interval logic, so a nested-loop fallback OR a

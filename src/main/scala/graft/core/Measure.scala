@@ -313,7 +313,7 @@ object Measure {
     * they intersect (boundary crossing or polygon containment), else the
     * min over all segment/point element pairs. O(|a|·|b|) element pairs —
     * for joins, cull first with the cell/tile index (`st_dwithinxy` +
-    * `DWithinJoinRewrite`); this kernel is the exact refine. NaN for
+    * `SpatialJoinRewrite`); this kernel is the exact refine. NaN for
     * EMPTY inputs (including collections of EMPTY parts). */
   def distance(a: Geom, b: Geom): Double = {
     if (a.isEmpty || b.isEmpty) return Double.NaN

@@ -3,17 +3,22 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.sql.Geo
 
 /** `spark.sql.extensions`-style integration: registers every engine function
-  * and the cast-elision optimizer rule at session build — the idiomatic
+  * and the engine's optimizer rules at session build — the idiomatic
   * deployment path (`--conf spark.sql.extensions=graft.plans.GraftExtensions`).
   * `Geo.register(spark)` remains the runtime path for externally-built
-  * sessions (the driver's Verify/Bench mains use it). */
+  * sessions (the Verify/Bench mains use it).
+  *
+  * An extension cannot set session confs, so a session built this way
+  * keeps two Catalyst rules that `Geo.register` excludes because they
+  * re-run each cover kernel up to 3× per row (see `Geo.register`). Pass
+  * `--conf spark.sql.optimizer.excludedRules=org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate,org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints`
+  * with the extension. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     Geo.functions.foreach { case (name, builder) =>
@@ -22,14 +27,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", name),
         (args: Seq[Expression]) => builder(args)))
     }
-    ext.injectOptimizerRule(_ => ElideRedundantGeoCasts)
-    ext.injectOptimizerRule(_ => ContainsJoinRewrite)
-    ext.injectOptimizerRule(_ => DWithinJoinRewrite)
-    ext.injectOptimizerRule(_ => IntersectsJoinRewrite)
+    GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
     // analysis-time check: aliases (and their column metadata) are intact
     // here — the optimizer's CollapseProject would inline them away
     ext.injectCheckRule(_ => plan => PlanarEdgesGuard.check(plan))
   }
+}
+
+object GraftExtensions {
+  /** The optimizer rules both install paths add, `Geo.register` and this
+    * extension. */
+  val optimizerRules: Seq[Rule[LogicalPlan]] =
+    Seq(SpatialJoinRewrite, ElideRedundantGeoCasts)
 }
 
 /** The reference's box kernel refuses non-planar edges rather than silently
@@ -82,10 +91,8 @@ object PlanarEdgesGuard extends Rule[LogicalPlan] {
         case _ =>
       }
       node.expressions.foreach(_.foreach {
-        case si: StaticInvoke
-            if si.staticObject == graft.sql.GeoOps.getClass &&
-              planarOnly.contains(si.functionName) =>
-          guardArgs(si.arguments)
+        case GeoCall(name, args) if planarOnly.contains(name) =>
+          guardArgs(args)
         // box_agg's boxUpdate invoke only materializes at physical
         // planning — guard the aggregate function itself
         case agg: graft.sql.StBoxAgg => guardArgs(Seq(agg.child))
@@ -108,23 +115,12 @@ object ElideRedundantGeoCasts extends Rule[LogicalPlan] {
 
   private val idempotentCasts = Set("castType", "castDims", "snapToGrid", "setSrid")
 
-  private def isGeoCast(e: Expression, name: String): Boolean = e match {
-    case si: StaticInvoke =>
-      si.staticObject == graft.sql.GeoOps.getClass && si.functionName == name
-    case _ => false
-  }
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
     // cast(cast(g, t), t) -> cast(g, t) when the target argument is the
     // same literal (same for dims casts, grid snaps, srid sets)
-    case outer: StaticInvoke
-        if outer.staticObject == graft.sql.GeoOps.getClass &&
-          idempotentCasts.contains(outer.functionName) &&
-          outer.arguments.nonEmpty &&
-          isGeoCast(outer.arguments.head, outer.functionName) &&
-          outer.arguments.tail ==
-            outer.arguments.head.asInstanceOf[StaticInvoke].arguments.tail =>
-      val inner = outer.arguments.head.asInstanceOf[StaticInvoke]
-      outer.copy(arguments = inner.arguments.head +: outer.arguments.tail)
+    case outer @ GeoCall(name, GeoCall(innerName, g +: innerRest) +: rest)
+        if idempotentCasts.contains(name) && innerName == name &&
+          rest == innerRest =>
+      outer.withNewChildren(g +: rest)
   }
 }

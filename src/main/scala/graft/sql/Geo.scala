@@ -535,11 +535,9 @@ object Geo {
         registry.createOrReplaceTempFunction(name, builder, "built-in")
       }
       if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.ContainsJoinRewrite)) {
+          .contains(graft.plans.SpatialJoinRewrite)) {
         spark.experimental.extraOptimizations ++=
-          Seq(graft.plans.ContainsJoinRewrite, graft.plans.DWithinJoinRewrite,
-            graft.plans.IntersectsJoinRewrite,
-            graft.plans.ElideRedundantGeoCasts, graft.plans.PlanarEdgesGuard)
+          graft.plans.GraftExtensions.optimizerRules :+ graft.plans.PlanarEdgesGuard
       }
       // InferFiltersFromGenerate adds `size(cover) > 0 AND isnotnull(cover)`
       // above every cover/cell explode; predicate pushdown then inlines the
@@ -557,6 +555,7 @@ object Geo {
       // kernels are null-propagating (the inferred null checks never prune
       // a row the predicate itself wouldn't), so both rules are excluded;
       // the remeasured plans drop from 3 kernel evaluations per row to 1.
+      // A session built through `GraftExtensions` passes this conf itself.
       val inferRules = Seq(
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints")

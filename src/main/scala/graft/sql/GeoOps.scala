@@ -825,7 +825,7 @@ object GeoOps {
 
   /** Within-distance predicate (ordinate form). Joins on it are
     * auto-rewritten to grid-cell equi-joins by
-    * [[graft.plans.DWithinJoinRewrite]]. */
+    * [[graft.plans.SpatialJoinRewrite]]. */
   def dwithinXY(x1: Double, y1: Double, x2: Double, y2: Double,
                 r: Double): Boolean =
     Pip.dist2(x1, y1, x2, y2) <= r * r
@@ -850,7 +850,7 @@ object GeoOps {
 
   /** Planar intersects predicate (PostGIS ST_Intersects). The second
     * argument decodes through the per-thread cache: in the cover-join
-    * plans (`SpatialJoins.intersectsJoin`, `IntersectsJoinRewrite`) it is
+    * plans (`SpatialJoins.intersectsJoin`, `SpatialJoinRewrite`) it is
     * the broadcast dim side, whose few distinct geometries recur once per
     * candidate pair. */
   def intersects(a: InternalRow, b: InternalRow): Boolean =

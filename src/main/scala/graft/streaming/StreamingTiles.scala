@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.operators.SpatialJoins
 import graft.sql.Geo
 
 /** Structured Streaming ingest operators. The reference itself is batch-only
@@ -11,75 +12,17 @@ import graft.sql.Geo
   * the same codegen'd kernels apply unchanged to streaming DataFrames, so
   * tile/cell assignment is a stateless projection, aggregation uses
   * watermarked windows, and exactly-once style dedup keeps per-key state in
-  * `flatMapGroupsWithState`. */
+  * `flatMapGroupsWithState`. A stream-static spatial join needs no
+  * streaming copy: `SpatialJoins.pipJoin`/`intersectsJoin` take the stream
+  * as their big side and broadcast the static side, so each micro-batch is
+  * a map-side join with no streaming state and no shuffle of the stream. */
 object StreamingTiles {
-
-  /** Stateless tile assignment on a stream — identical expressions to the
-    * batch path (`SpatialJoins.assignTiles`). */
-  def assignTiles(stream: DataFrame, lonCol: String, latCol: String,
-                  zoom: Int): DataFrame = {
-    Geo.register(stream.sparkSession)
-    stream
-      .withColumn("tile_id", call_function("st_tilezxy",
-        col(lonCol).cast("double"), col(latCol).cast("double"), lit(zoom)))
-      .withColumn("tile_x", call_function("st_tilex", col("tile_id")))
-      .withColumn("tile_y", call_function("st_tiley", col("tile_id")))
-  }
-
-  /** Stream-static PIP join: a point stream enriched against a static
-    * polygon overlay. Same cover-equi-join + exact-refine shape as the
-    * batch `SpatialJoins.pipJoin`; the exploded polygon side is a static
-    * broadcast, so each micro-batch is a map-side join — no streaming
-    * state, no shuffle of the stream. */
-  def pipJoinStream(stream: DataFrame, polygons: DataFrame, polyCol: String,
-                    lonCol: String, latCol: String, zoom: Int): DataFrame = {
-    Geo.register(stream.sparkSession)
-    val exploded = org.apache.spark.sql.functions.broadcast(
-      polygons.withColumn("__tile", explode(call_function("st_tilecover",
-        col(polyCol), lit(zoom)))))
-    stream
-      .withColumn("__ptile", call_function("st_tilezxy",
-        col(lonCol).cast("double"), col(latCol).cast("double"), lit(zoom)))
-      .join(exploded, col("__ptile") === col("__tile") &&
-        call_function("st_containsxy", col(polyCol),
-          col(lonCol).cast("double"), col(latCol).cast("double")))
-      .drop("__ptile", "__tile")
-  }
-
-  /** Stream-static geometry-geometry INTERSECTS join: a geometry stream
-    * (trajectory segments, detection footprints, …) enriched against a
-    * static layer. Same double-cover equi-join + exact refine + exactly-
-    * once min-shared-tile claim as the batch
-    * `SpatialJoins.intersectsJoin`; the static side broadcasts exploded,
-    * so each micro-batch is a map-side join — no streaming state, no
-    * shuffle of the stream. */
-  def intersectsJoinStream(stream: DataFrame, geoms: DataFrame,
-                           streamGeomCol: String, staticGeomCol: String,
-                           zoom: Int = 6): DataFrame = {
-    Geo.register(stream.sparkSession)
-    val staticSide = org.apache.spark.sql.functions.broadcast(
-      geoms
-        .withColumn("__rcover", call_function("st_tilecover",
-          col(staticGeomCol), lit(zoom)))
-        .withColumn("__rtile", explode(col("__rcover"))))
-    stream
-      .withColumn("__lcover", call_function("st_tilecover",
-        col(streamGeomCol), lit(zoom)))
-      .withColumn("__ltile", explode(col("__lcover")))
-      .join(staticSide, col("__ltile") === col("__rtile") &&
-        col("__ltile") === org.apache.spark.sql.functions.array_min(
-          org.apache.spark.sql.functions.array_intersect(
-            col("__lcover"), col("__rcover"))) &&
-        call_function("st_intersects",
-          col(streamGeomCol), col(staticGeomCol)))
-      .drop("__lcover", "__ltile", "__rcover", "__rtile")
-  }
 
   /** Watermarked per-tile windowed counts (update-mode friendly). */
   def tileCounts(stream: DataFrame, tsCol: String, lonCol: String,
                  latCol: String, zoom: Int, windowDur: String,
                  watermark: String): DataFrame = {
-    assignTiles(stream, lonCol, latCol, zoom)
+    SpatialJoins.assignTiles(stream, lonCol, latCol, zoom)
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), windowDur), col("tile_id"))
       .agg(count(lit(1)).as("n"))

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.SpatialJoins
+
 class StreamingSpec extends AnyFunSuite {
   lazy val spark = graft.sql.SparkTestSession.spark
 
@@ -97,8 +99,7 @@ class StreamingSpec extends AnyFunSuite {
     val boxes = input.toDF().toDF("id", "lon", "lat")
       .selectExpr("id",
         "st_boxtopolygon(lon - 5.0, lat - 5.0, lon + 5.0, lat + 5.0) AS bg")
-    val q = StreamingTiles.intersectsJoinStream(boxes, zones, "bg", "zg",
-        zoom = 4)
+    val q = SpatialJoins.intersectsJoin(boxes, zones, "bg", "zg", zoom = 4)
       .select("id", "zone_id")
       .writeStream.format("memory").queryName("isect_stream")
       .outputMode("append").start()
@@ -127,7 +128,7 @@ class StreamingSpec extends AnyFunSuite {
         .stripMargin)
     val input = MemoryStream[(Long, Double, Double)]
     val df = input.toDF().toDF("id", "lon", "lat")
-    val q = StreamingTiles.pipJoinStream(df, polys, "poly", "lon", "lat", zoom = 4)
+    val q = SpatialJoins.pipJoin(df, polys, "poly", "lon", "lat", zoom = 4)
       .select("id", "poly_id")
       .writeStream.format("memory").queryName("pip_stream").outputMode("append")
       .start()
