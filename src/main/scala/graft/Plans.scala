@@ -185,9 +185,10 @@ object Plans {
           val b = graft.pipeline.Pipeline.withBucket(
             imagesPq.limit(2000), "lon", "lat", 3)
           graft.pipeline.Pipeline.writeSnapshot(b, rowDir, 1L)
+          // a non-empty batch: an empty merge writes no tombstones, and
+          // the plan below would have no anti-join to show
           graft.pipeline.Pipeline.mergeSnapshot(
-            b.filter(col("image_id") < "img000000200")
-              .withColumn("caption", lit("v2")), rowDir, 2L,
+            b.limit(200).withColumn("caption", lit("v2")), rowDir, 2L,
             mergeKeyCol = "image_id")
         }
         fmt(graft.pipeline.Pipeline.readCurrent(spark, rowDir)

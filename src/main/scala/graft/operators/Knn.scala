@@ -1,42 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.sql.Geo
 
 /** Exact kNN via cell-ring expansion (SURVEY.md §2C).
   *
-  * [[knnJoin]] is the engine path: queries stay a DataFrame of any
-  * cardinality; each round explodes ring-r candidate cells per *incomplete*
-  * query, equi-joins against the points' grid cell (Catalyst/AQE picks
-  * broadcast vs shuffle from stats), takes windowed top-k, and retires
-  * queries whose k-th distance is inside the guaranteed radius: a query is
-  * done when its k-th best distance is <= ((r-1)*res)^2, because every point
-  * within that distance lies inside Chebyshev ring r of the query cell.
-  * Rounds are O(log) in the distance to the k-th neighbor. No driver-side
-  * data loops — the only per-round driver actions are an `isEmpty` gate on
-  * the shrinking query set and cache bookkeeping. Results are exact and
-  * deterministic (ties broken by the caller's tie columns).
+  * Every join here runs one loop, [[expand]], over a round schedule: each
+  * round explodes candidate cells per *open* query, equi-joins them against
+  * the points' cell (Catalyst/AQE picks broadcast vs shuffle from stats),
+  * takes a windowed top-k, and retires the queries whose k-th distance is
+  * inside the round's guaranteed bound. [[knnJoin]] (planar) and
+  * [[knnMetersJoin]]/[[knnMetersJoinAdaptive]] (spherical) differ only in
+  * the schedule they build. Rounds are O(log) in the distance to the k-th
+  * neighbor. No driver-side data loops — the only per-round driver actions
+  * are the checkpoints and the retired-count they observe. Results are
+  * exact and deterministic (ties broken by the caller's tie columns).
   */
 object Knn {
-
-  /** Convenience wrapper for a driver-side query list.
-    *
-    * @param points   df with lonCol/latCol + payload columns
-    * @param queries  small query set: (qid, qlon, qlat)
-    * @param k        neighbors per query
-    * @param res      grid resolution in degrees
-    * @param tieCols  deterministic tie-break columns on the point side
-    * @return columns: qid, rank, dist2 + point payload columns
-    */
-  def knn(points: DataFrame, queries: Seq[(Long, Double, Double)], k: Int,
-          res: Double, tieCols: Seq[String]): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    knnJoin(points, queries.toDF("qid", "qlon", "qlat"), k, res, tieCols)
-  }
 
   /** Spherical kNN join — exact k nearest neighbors in METERS (haversine),
     * latitude-correct everywhere including poles and the antimeridian
@@ -53,54 +37,49 @@ object Knn {
     * retires when its k-th distance is ≤ r_i: the cap cover is a
     * GUARANTEED superset of the cells within r_i (lattice-ring stepping
     * is NOT sound across cube-face corners — the q84 sf0.1 sweep caught
-    * that). Same one-heavy-job-per-round, checkpointed-results
-    * discipline as [[knnJoin]].
+    * that).
     *
     * @param startLevel finest cell level (match expected neighbor
     *        distance: level 12 ≈ 1 km cells; too fine only adds rounds)
     * @return qid, rank, dist_m + point payload columns */
   def knnMetersJoin(points: DataFrame, queries: DataFrame, k: Int,
                     startLevel: Int = 12, tieCols: Seq[String] = Seq(),
-                    persistPoints: Boolean = true,
                     onRound: (Int, Int, Long) => Unit = null): DataFrame = {
-    val spark = points.sparkSession
-    Geo.register(spark)
+    Geo.register(points.sparkSession)
     require(startLevel >= 0 && startLevel <= 28)
-    val celled = points.withColumn("__pcell", call_function("st_cellid",
-      col("lon").cast("double"), col("lat").cast("double"), lit(startLevel)))
-    val pts =
-      if (persistPoints)
-        celled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else celled
+    val pts = celled(points, "st_cellid", lit(startLevel))
     val leveled = queries.select(col("qid"),
         col("qlon").cast("double").as("qlon"),
         col("qlat").cast("double").as("qlat"))
       .withColumn("__lvl", lit(startLevel))
       .localCheckpoint(eager = true)
-    val out = metersLoop(pts, leveled, k, Seq(startLevel), tieCols, onRound)
-    if (persistPoints) pts.unpersist(blocking = false)
-    out
+    metersJoin(pts, leveled, Seq(startLevel), k, tieCols, onRound)
   }
+
+  /** Density-sketch level and the finest start level of
+    * [[knnMetersJoinAdaptive]]. */
+  private val SketchLevel = 6
+  private val MaxStartLevel = 14
 
   /** Adaptive-start spherical kNN: per-query starting level chosen from a
     * bounded density sketch, so a large mixed query set doesn't pay
     * max-rounds in dense regions OR giant round-0 candidate joins in
     * sparse ones (the fixed-`startLevel` failure modes at 10^5+ queries).
     *
-    * The sketch is points-per-cell at `sketchLevel` — at most 6·4^level
-    * rows (24,576 at level 6), aggregated in ONE map-side-combined pass
-    * and broadcast; each query reads its local density rho from its
-    * sketch cell and picks the start radius where the expected round-0
-    * candidate count is ~4k (`r = sqrt(4k·cellArea/(pi·count))`), clamped
-    * to even levels in [0, maxStartLevel]. Queries in an EMPTY sketch
-    * cell start at the sketch level itself (their k-th neighbor is at
-    * least cell-scale away — starting finer only adds rounds).
+    * The sketch is points-per-cell at level 6 — at most 6·4^6 = 24,576
+    * rows, aggregated in ONE map-side-combined pass and broadcast; each
+    * query reads its local density rho from its sketch cell and picks the
+    * start radius where the expected round-0 candidate count is ~4k
+    * (`r = sqrt(4k·cellArea/(pi·count))`), clamped to even levels in
+    * [0, 14]. Queries in an EMPTY sketch cell start at the sketch level
+    * itself (their k-th neighbor is at least cell-scale away — starting
+    * finer only adds rounds).
     *
-    * Points are celled ONCE at `maxStartLevel` and the single persisted
+    * Points are celled ONCE at level 14 and the single persisted
     * projection is shared by every level group (each round joins on
     * `st_cellparent(__pcell, level)`, which is valid for any level ≤ the
-    * celling level). All groups run in ONE unified loop: because the
-    * round radius depends only on the CURRENT level (radius = 2·minWidth
+    * celling level). All groups run in ONE schedule: because the round
+    * radius depends only on the CURRENT level (radius = 2·minWidth
     * (level), and both coarsen in lockstep), a query entering when the
     * loop reaches its start level sees exactly the schedule its own
     * dedicated loop would have run — so groups share each round's
@@ -109,45 +88,33 @@ object Knn {
     * level). Results are EXACT and identical to [[knnMetersJoin]] — the
     * start level affects only the round schedule (q94 oracles this
     * against brute force). `onRound` (round, level, retired-count) feeds
-    * the bench's rounds histogram; null skips the extra count. */
+    * the bench's rounds histogram. */
   def knnMetersJoinAdaptive(points: DataFrame, queries: DataFrame, k: Int,
                             tieCols: Seq[String] = Seq(),
-                            persistPoints: Boolean = true,
-                            sketchLevel: Int = 6, maxStartLevel: Int = 14,
                             onRound: (Int, Int, Long) => Unit = null): DataFrame = {
-    val spark = points.sparkSession
-    Geo.register(spark)
-    require(sketchLevel >= 0 && sketchLevel <= maxStartLevel &&
-      maxStartLevel <= 28)
-    val lonD = col("lon").cast("double")
-    val latD = col("lat").cast("double")
+    Geo.register(points.sparkSession)
     // cell the points FIRST and derive the sketch from the persisted
-    // projection (st_cellparent(__pcell, sketchLevel) ≡ st_cellid at
-    // sketchLevel — the same identity every round join relies on): the
+    // projection (st_cellparent(__pcell, SketchLevel) ≡ st_cellid at
+    // SketchLevel — the same identity every round join relies on): the
     // sketch aggregation materializes the persist as a side effect, so
     // the source is scanned once, not once for the sketch and again for
     // round 0 (r06; guide §1.2 — don't compute things twice).
-    val celled = points.withColumn("__pcell", call_function("st_cellid",
-      lonD, latD, lit(maxStartLevel)))
-    val pts =
-      if (persistPoints)
-        celled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else celled
+    val pts = celled(points, "st_cellid", lit(MaxStartLevel))
     val sketch = pts
       .groupBy(call_function("st_cellparent", col("__pcell"),
-        lit(sketchLevel)).as("__scell"))
+        lit(SketchLevel)).as("__scell"))
       .agg(count(lit(1)).as("__scount"))
     // expected round-0 candidates ≈ rho·pi·r² = 4k  =>  r² = 4k·area/(pi·n)
     // radius(L) = 2·minWidth(L) = 2C/2^L  =>  L = floor(log2(2C / r))
     val cellArea = 4.0 * math.Pi *
       graft.core.Measure.EarthRadiusMeters * graft.core.Measure.EarthRadiusMeters /
-      (6.0 * math.pow(4.0, sketchLevel))
+      (6.0 * math.pow(4.0, SketchLevel))
     val c2 = 2.0 * graft.core.Cells.minEdgeMetersLowerBound(0)
     val qcell = call_function("st_cellid",
-      col("qlon").cast("double"), col("qlat").cast("double"), lit(sketchLevel))
+      col("qlon").cast("double"), col("qlat").cast("double"), lit(SketchLevel))
     val rQ = sqrt(lit(4.0 * k * cellArea / math.Pi) / col("__scount"))
-    val lvlExpr = when(col("__scount").isNull, lit(sketchLevel))
-      .otherwise(least(lit(maxStartLevel), greatest(lit(0),
+    val lvlExpr = when(col("__scount").isNull, lit(SketchLevel))
+      .otherwise(least(lit(MaxStartLevel), greatest(lit(0),
         floor(log2(lit(c2) / rQ)).cast("int"))))
     val leveled = queries
       .select(col("qid"), col("qlon").cast("double").as("qlon"),
@@ -161,261 +128,202 @@ object Knn {
       .drop("__scell", "__scount")
       .localCheckpoint(eager = true)
     val levels = leveled.select(col("__lvl")).distinct()
-      .collect().map(_.getInt(0)).sorted // bounded: ≤ maxStartLevel/2+1
-    val out = metersLoop(pts, leveled, k, levels.toSeq, tieCols, onRound)
-    if (persistPoints) pts.unpersist(blocking = false)
-    out
+      .collect().map(_.getInt(0)).sorted // bounded: ≤ MaxStartLevel/2+1
+    metersJoin(pts, leveled, levels.toSeq, k, tieCols, onRound)
   }
 
-  /** The shared spherical-expansion loop with staged query activation:
-    * `pts` must carry `__pcell` at a level ≥ every entry in `levels`;
-    * `leveled` must be checkpointed and carry (qid, qlon, qlat, __lvl)
-    * with `__lvl` drawn from `levels`. The loop starts at the FINEST
-    * entry level and coarsens by 2 per round (radius ×4 in lockstep, so
-    * radius = 2·minWidth(level) at every round); queries activate when
-    * the loop reaches their `__lvl` — from that round on their (level,
-    * radius) schedule is identical to a dedicated loop started there, so
-    * the output is exactly the per-group result while every round's
-    * candidate join is shared. See [[knnMetersJoin]] for the algorithm. */
-  private def metersLoop(pts: DataFrame, leveled: DataFrame, k: Int,
-                         levels: Seq[Int], tieCols: Seq[String],
+  /** The spherical schedule with staged query activation: `pts` must carry
+    * `__pcell` at a level ≥ every entry in `levels`; `leveled` must be
+    * checkpointed and carry (qid, qlon, qlat, __lvl) with `__lvl` drawn
+    * from `levels`. The schedule starts at the FINEST entry level and
+    * coarsens by 2 per round, clamping at 0; the round-0 cap is a few cells
+    * at that level, and the radius quadruples in lockstep with the level,
+    * so cover size stays flat and radius = 2·minWidth(level) at EVERY
+    * round. That is why staged activation is exact: a query entering when
+    * the schedule reaches its `__lvl` sees the same (level, radius)
+    * schedule a dedicated loop started there would run, and every round's
+    * candidate join is shared. The last round's cap is the whole sphere. */
+  private def metersJoin(pts: DataFrame, leveled: DataFrame,
+                         levels: Seq[Int], k: Int, tieCols: Seq[String],
                          onRound: (Int, Int, Long) => Unit): DataFrame = {
-    val spark = pts.sparkSession
-    import spark.implicits._
-    def minWidthMeters(level: Int): Double =
-      graft.core.Cells.minEdgeMetersLowerBound(level)
     val halfSphere = math.Pi * graft.core.Measure.EarthRadiusMeters
-
-    def roundTopk(remaining: DataFrame, level: Int,
-                  radius: Double, finalRound: Boolean): DataFrame = {
-      val cand = remaining.withColumn("__ccell",
-        explode(call_function("st_cellcapcover",
-          $"qlon", $"qlat", lit(radius), lit(level))))
-      val joined = pts
-        .withColumn("__cell",
-          call_function("st_cellparent", col("__pcell"), lit(level)))
-        .join(cand, $"__cell" === $"__ccell")
-        .withColumn("__dist", call_function("st_distancesphere",
-          $"lon".cast("double"), $"lat".cast("double"), $"qlon", $"qlat"))
-        // drop beyond-radius candidates BEFORE the top-k sort. Semantics-
-        // preserving: a query retires only when its k-th distance <= r, so
-        // the retained top-k is identical for every query that retires
-        // this round, and non-retired partials are discarded. Without
-        // this, a coarse-round cover cell PARTIALLY inside the radius
-        // feeds its whole population to the sort — a dense city 200 km
-        // outside an ocean query's 156 km radius is still inside its
-        // level-6 cover, and 10^5 such queries spilled a 75 GB sort (the
-        // 10^5-query bench caught it). The filter is codegen'd against
-        // the join output, so the sort input is now O(rho * pi * r^2) per
-        // query — the density bound the round schedule was designed for.
-        .filter($"__dist" <= radius)
-      val w = Window.partitionBy($"qid")
-        .orderBy($"__dist" +: tieCols.map(col): _*)
-      // retirement flag computed IN the round plan (r06): a second window
-      // over the SAME qid partitioning (no extra exchange — the ranked
-      // window already established it) marks every row of a retired
-      // query, so the loop derives the finished part, the retired-count
-      // and the next query set from the checkpointed flag instead of a
-      // separate groupBy job + broadcast semi-join per round. The cap
-      // cover is a superset of all cells within r, so a k-th distance
-      // <= r certifies the true top-k; the FINAL round's cap is the
-      // whole sphere, so whatever a query has then IS its global top-k —
-      // partial results retire too (standard kNN semantics for datasets
-      // with fewer than k points).
-      val wq = Window.partitionBy($"qid")
-      joined
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= k)
-        .withColumn("__done",
-          (count(lit(1)).over(wq) >= k && max($"__dist").over(wq) <= radius)
-            || lit(finalRound))
-    }
-    def finished(topk: DataFrame): DataFrame =
-      topk.filter($"__done")
-        .withColumnRenamed("__dist", "dist_m")
-        .drop("__cell", "__ccell", "__pcell", "qlon", "qlat", "__done")
-
-    val bare = leveled.drop("__lvl")
-    if (levels.isEmpty) // empty query set: typed empty result, no rounds
-      return finished(roundTopk(bare, 0, 1.0, finalRound = false)).limit(0)
-    // the loop visits levels.max, max-2, ..., then clamps at 0 — an entry
+    val top = levels.maxOption.getOrElse(0)
+    // the schedule visits top, top-2, ..., then clamps at 0 — an entry
     // level off that lattice would never activate (silent query loss)
-    require(levels.forall(l => l == 0 || (levels.max - l) % 2 == 0),
+    require(levels.forall(l => l == 0 || (top - l) % 2 == 0),
       s"entry levels must sit on the coarsening lattice: $levels")
-    // activate-once: level clamps at 0 once reached, so a plain
-    // set-membership check would re-union the level-0 entries every
-    // subsequent round — each entry level must activate exactly once
-    val pending = scala.collection.mutable.Set(levels: _*)
-    var level = levels.max
-    var round = 0
-    var nActive = 0L
-    // round-0 cap: a few cells at the finest entry level; radius then
-    // quadruples in lockstep with the level coarsening by 2, so cover
-    // size stays flat and radius = 2·minWidth(level) at EVERY round —
-    // which is why staged activation is exact: a query entering at its
-    // chosen level sees the same (level, radius) schedule a dedicated
-    // loop started there would run
-    var radius = 2.0 * minWidthMeters(level)
-    var remaining: DataFrame = null
-    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var done = false
-    // open-query bookkeeping by COUNT over checkpointed frames (see
-    // knnJoin): the retire decision is one tiny aggregation over the
-    // checkpointed top-k; the query-set anti-join + checkpoint is skipped
-    // on rounds that retire nothing and after the final round.
-    while (!done) {
-      // activate the queries whose start level the loop just reached
-      if (pending.remove(level)) {
-        val entering = leveled.filter($"__lvl" === level).drop("__lvl")
-        remaining = (if (remaining == null) entering
-          else remaining.unionByName(entering)).localCheckpoint(eager = true)
-        nActive = remaining.count()
-      }
-      val finalRound = radius >= halfSphere
-      if (nActive > 0) {
-        val r = if (finalRound) halfSphere + 1.0 else radius // full sphere
-        // the retired-query count rides the checkpoint action itself
-        // (`observe` sums the rank-1 rows flagged __done during the same
-        // job — the former per-round groupBy+count was one extra
-        // scheduled job; see Dedup.dupClusters for the same idiom)
-        val obs = org.apache.spark.sql.Observation()
-        val topk = roundTopk(remaining, level, r, finalRound)
-          .observe(obs, sum(when($"__done" && $"rank" === 1, 1L)
-            .otherwise(0L)).as("__ndone"))
-          .localCheckpoint(eager = true)
-        val nDone = Observations.observedLong(obs,
-          topk.filter($"__done" && $"rank" === 1).count())
-        if (nDone > 0) {
-          parts += finished(topk)
-          nActive -= nDone
-          // every active query retired: drop the set outright, or the
-          // next activation would union the retired qids back in
-          remaining =
-            if (nActive > 0)
-              remaining.join(
-                broadcast(topk.filter($"__done" && $"rank" === 1)
-                  .select($"qid")),
-                Seq("qid"), "left_anti")
-                .localCheckpoint(eager = true)
-            else null
-        }
-        if (onRound != null) onRound(round, level, nDone)
-        if (finalRound) done = true
-      } else if (finalRound || pending.isEmpty) {
-        // nothing active and nothing still to enter below: finished
-        // (queries unretired after the full-sphere round matched ZERO
-        // points — empty dataset — and their correct output is no rows)
-        done = true
-      }
-      level = math.max(0, level - 2)
-      radius *= 4.0
-      round += 1
+    val steps = LazyList.iterate(
+        (top, 2.0 * graft.core.Cells.minEdgeMetersLowerBound(top))) {
+      case (level, radius) => (math.max(0, level - 2), radius * 4.0)
     }
-    if (parts.isEmpty) // every round skipped (all-empty activation)
-      finished(roundTopk(bare, levels.max, radius,
-        finalRound = false)).limit(0)
-    else parts.reduce(_ unionByName _)
+    val n = steps.indexWhere(_._2 >= halfSphere) + 1
+    val schedule = steps.take(n).zipWithIndex.map { case ((level, radius), i) =>
+      val last = i == n - 1
+      Round(
+        // activate-once: the level clamps at 0, so each entry level enters
+        // at the FIRST round that reaches it, never again
+        enter = if (levels.contains(level) &&
+            steps.indexWhere(_._1 == level) == i)
+          Some(col("__lvl") === level) else None,
+        cells = call_function("st_cellcapcover", col("qlon"), col("qlat"),
+          lit(if (last) halfSphere + 1.0 else radius), lit(level)),
+        key = call_function("st_cellparent", col("__pcell"), lit(level)),
+        bound = radius, last = last)
+    }
+    val dist = call_function("st_distancesphere", col("lon").cast("double"),
+      col("lat").cast("double"), col("qlon"), col("qlat"))
+    expand(pts, leveled, schedule, dist, "dist_m", k, tieCols,
+      if (onRound == null) null
+      else (i, nDone) => onRound(i, steps(i)._1, nDone))
   }
 
-  /** The distributed kNN join. @param queries df with qid, qlon, qlat.
+  /** The distributed planar kNN join over lon/lat degrees. Round r probes
+    * every cell within Chebyshev ring r of the query cell, r = 2, 4, 8, …
+    * up to 2·maxR (maxR cells span the whole lon range); a query retires
+    * when its k-th distance is ≤ (r-1)·res, because every point within
+    * that distance lies inside ring r. Every query enters at round 0.
     *
-    * By default the celled point projection persists (memory-and-disk)
-    * across the ring-expansion rounds — the iterative-refinement pattern:
-    * each round re-probes the same input, and re-scanning the source per
-    * round would multiply the dominant cost by the round count (~log of
-    * the distance to the k-th neighbor). Unpersisted before returning;
-    * results are checkpointed so they never re-execute the rounds. Pass
-    * `persistPoints = false` when the projection exceeds cluster storage
-    * and re-scanning the (columnar, pruned) source is the cheaper trade. */
+    * @param queries df with qid, qlon, qlat
+    * @param res     grid resolution in degrees
+    * @param tieCols deterministic tie-break columns on the point side
+    * @return qid, rank, dist2 (squared degrees) + point payload columns */
   def knnJoin(points: DataFrame, queries: DataFrame, k: Int, res: Double,
-              tieCols: Seq[String], persistPoints: Boolean = true): DataFrame = {
-    val spark = points.sparkSession
-    Geo.register(spark)
-    import spark.implicits._
-
-    val celled = points.withColumn("__cell", call_function("st_gridcell",
-      col("lon").cast("double"), col("lat").cast("double"), lit(res)))
-    val pts =
-      if (persistPoints)
-        celled.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else celled
-
-    // one round's candidate top-k plan (the single heavy job per round)
-    def roundTopk(remaining: DataFrame, r: Int): DataFrame = {
-      val cand = remaining.withColumn("__ccell",
-        explode(call_function("st_gridring", col("__qcell"), lit(r))))
-      val bound = (r - 1).toDouble * res
-      val joined = pts.join(cand, $"__cell" === $"__ccell")
-        .withColumn("__dist2",
-          ($"lon" - $"qlon") * ($"lon" - $"qlon") +
-            ($"lat" - $"qlat") * ($"lat" - $"qlat"))
-        // beyond-bound candidates can't retire a query this round and
-        // can't appear in a retired query's top-k (kth <= bound) — drop
-        // them before the sort (see metersLoop: the spherical twin of
-        // this filter killed a 75 GB spill at 10^5 queries)
-        .filter($"__dist2" <= lit(bound * bound))
-      val w = Window.partitionBy($"qid")
-        .orderBy($"__dist2" +: tieCols.map(col): _*)
-      // retirement flag in the round plan (r06): second window over the
-      // same qid partitioning — no extra exchange, and the loop derives
-      // everything from the checkpointed flag (see metersLoop)
-      val wq = Window.partitionBy($"qid")
-      joined
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= k)
-        .withColumn("__done",
-          count(lit(1)).over(wq) >= k &&
-            max($"__dist2").over(wq) <= lit(bound * bound))
-    }
-    def finished(topk: DataFrame): DataFrame =
-      topk.filter($"__done")
-        .withColumnRenamed("__dist2", "dist2")
-        .drop("__cell", "__ccell", "__qcell", "qlon", "qlat", "__done")
-
-    var remaining = queries.select(col("qid"),
+              tieCols: Seq[String]): DataFrame = {
+    Geo.register(points.sparkSession)
+    val pts = celled(points, "st_gridcell", lit(res))
+    val qs = queries.select(col("qid"),
         col("qlon").cast("double").as("qlon"),
         col("qlat").cast("double").as("qlat"))
       .withColumn("__qcell", call_function("st_gridcell",
         col("qlon"), col("qlat"), lit(res)))
-      .localCheckpoint(eager = true)
-    // open-query bookkeeping by COUNT over the checkpointed frames: the
-    // loop gate and the "did anything retire" decision cost one tiny
-    // aggregation over the (<= k rows/query) checkpointed top-k, and the
-    // anti-join + checkpoint of the query set is skipped entirely on
-    // rounds that retire nothing and after the final round (r06 — the
-    // former isEmpty-gated shape paid both every round).
-    var nRemaining = remaining.count()
-    var r = 2
-    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val maxR = math.ceil(360.0 / res).toInt + 1
-
-    while (nRemaining > 0 && r <= maxR * 2) {
-      // materialize the (tiny: <= k rows per open query) top-k once —
-      // the finished part, the retired count (observed during the same
-      // job) and the next query set all derive from the checkpointed
-      // result, so the join+window executes exactly once per round and
-      // nothing re-executes when the final union is consumed
-      val obs = org.apache.spark.sql.Observation()
-      val topk = roundTopk(remaining, r)
-        .observe(obs, sum(when($"__done" && $"rank" === 1, 1L)
-          .otherwise(0L)).as("__ndone"))
-        .localCheckpoint(eager = true)
-      val nDone = Observations.observedLong(obs,
-        topk.filter($"__done" && $"rank" === 1).count())
-      if (nDone > 0) {
-        parts += finished(topk)
-        nRemaining -= nDone
-        if (nRemaining > 0)
-          remaining = remaining.join(
-            broadcast(topk.filter($"__done" && $"rank" === 1).select($"qid")),
-            Seq("qid"), "left_anti")
-            .localCheckpoint(eager = true)
-      }
-      r *= 2
+    val rs = Iterator.iterate(2)(_ * 2).takeWhile(_ <= maxR * 2).toSeq
+    val schedule = rs.zipWithIndex.map { case (r, i) =>
+      val bound = (r - 1).toDouble * res
+      Round(enter = if (i == 0) Some(lit(true)) else None,
+        cells = call_function("st_gridring", col("__qcell"), lit(r)),
+        key = col("__pcell"), bound = bound * bound, last = i == rs.size - 1)
     }
-    if (persistPoints) pts.unpersist(blocking = false)
-    require(nRemaining == 0, "kNN join did not converge")
-    if (parts.isEmpty) finished(roundTopk(remaining, 2)).limit(0)
+    val dist = (col("lon") - col("qlon")) * (col("lon") - col("qlon")) +
+      (col("lat") - col("qlat")) * (col("lat") - col("qlat"))
+    expand(pts, qs, schedule, dist, "dist2", k, tieCols, null)
+  }
+
+  /** `points` with its cell (`fn(lon, lat, arg)`) as `__pcell`, persisted
+    * (memory-and-disk) across the rounds — each round re-probes the same
+    * input, and re-scanning the source per round would multiply the
+    * dominant cost by the round count. [[expand]] unpersists it. */
+  private def celled(points: DataFrame, fn: String, arg: Column): DataFrame =
+    points.withColumn("__pcell", call_function(fn,
+        col("lon").cast("double"), col("lat").cast("double"), arg))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** One ring-expansion round.
+    * @param enter queries (a predicate over the query frame) that join the
+    *        open set at this round; None adds nobody
+    * @param cells the array of candidate cells an open query probes
+    * @param key   the point-side cell those candidates equi-join
+    * @param bound an open query retires when it has k candidates and its
+    *        k-th distance is ≤ bound; the cells hold every point that close
+    * @param last  the final round: admits every candidate and retires every
+    *        open query with whatever it found (fewer than k points exist) */
+  private final case class Round(enter: Option[Column], cells: Column,
+                                 key: Column, bound: Double, last: Boolean)
+
+  /** The ring-expansion loop shared by every kNN join. `pts` carries
+    * `__pcell` and is persisted (unpersisted here); `queries` carries qid,
+    * qlon, qlat and whatever the schedule's columns read. `dist` is the
+    * point-to-query distance, output as `distName`; `onRound(round,
+    * retired)` runs after each round that had open queries.
+    *
+    * One heavy job per round: the top-k (≤ k rows per open query) is
+    * checkpointed, and the retired count rides that checkpoint's action
+    * through `observe`; the finished rows and the next open set derive
+    * from the checkpoint, so the join+window executes exactly once per
+    * round and nothing re-executes when the final union is consumed. The
+    * open-set anti-join + checkpoint is skipped on rounds that retire
+    * nobody. */
+  private def expand(pts: DataFrame, queries: DataFrame, schedule: Seq[Round],
+                     dist: Column, distName: String, k: Int,
+                     tieCols: Seq[String],
+                     onRound: (Int, Long) => Unit): DataFrame = {
+    def roundTopk(open: DataFrame, round: Round): DataFrame = {
+      val joined = pts.withColumn("__cell", round.key)
+        .join(open.withColumn("__ccell", explode(round.cells)),
+          col("__cell") === col("__ccell"))
+        .withColumn("__dist", dist)
+      // drop beyond-bound candidates BEFORE the top-k sort: they can't
+      // retire a query this round nor sit in a retired query's top-k, and
+      // non-retired partials are discarded. Without this, a coarse-round
+      // cover cell PARTIALLY inside the radius feeds its whole population
+      // to the sort — a dense city 200 km outside an ocean query's 156 km
+      // radius is still inside its level-6 cover, and 10^5 such queries
+      // spilled a 75 GB sort (the 10^5-query bench caught it).
+      val inBound =
+        if (round.last) joined else joined.filter(col("__dist") <= round.bound)
+      val w = Window.partitionBy(col("qid"))
+        .orderBy(col("__dist") +: tieCols.map(col): _*)
+      // retirement flag computed IN the round plan (r06): a second window
+      // over the SAME qid partitioning (no extra exchange — the ranked
+      // window already established it) marks every row of a retired
+      // query, so the loop derives the finished part, the retired count
+      // and the next open set from the checkpointed flag instead of a
+      // separate groupBy job + broadcast semi-join per round
+      val wq = Window.partitionBy(col("qid"))
+      inBound
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .withColumn("__done", (count(lit(1)).over(wq) >= k &&
+          max(col("__dist")).over(wq) <= round.bound) || lit(round.last))
+    }
+    // output: the point columns, qid, distName and rank
+    val internal = queries.columns.filter(_ != "qid") ++
+      Seq("__pcell", "__cell", "__ccell", "__done")
+    def finished(topk: DataFrame): DataFrame =
+      topk.filter(col("__done"))
+        .withColumnRenamed("__dist", distName)
+        .drop(internal: _*)
+    val retired = col("__done") && col("rank") === 1
+
+    val lastEntry = schedule.lastIndexWhere(_.enter.nonEmpty)
+    var open: DataFrame = null
+    var nOpen = 0L
+    val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var i = 0
+    // stop after the last round, or once nobody is open and nobody enters
+    while (i < schedule.size && (nOpen > 0 || i <= lastEntry)) {
+      val round = schedule(i)
+      round.enter.foreach { cond =>
+        val entering = queries.filter(cond)
+        open = (if (open == null) entering else open.unionByName(entering))
+          .localCheckpoint(eager = true)
+        nOpen = open.count()
+      }
+      if (nOpen > 0) {
+        val obs = org.apache.spark.sql.Observation()
+        val topk = roundTopk(open, round)
+          .observe(obs, sum(when(retired, 1L).otherwise(0L)).as("__ndone"))
+          .localCheckpoint(eager = true)
+        val nDone = Observations.observedLong(obs,
+          topk.filter(retired).count())
+        if (nDone > 0) {
+          parts += finished(topk)
+          nOpen -= nDone
+          // every open query retired: drop the set outright, or the next
+          // activation would union the retired qids back in
+          open =
+            if (nOpen > 0)
+              open.join(broadcast(topk.filter(retired).select(col("qid"))),
+                Seq("qid"), "left_anti").localCheckpoint(eager = true)
+            else null
+        }
+        if (onRound != null) onRound(i, nDone)
+      }
+      i += 1
+    }
+    pts.unpersist(blocking = false)
+    // no query retired (empty query set or no points): a typed empty result
+    if (parts.isEmpty) finished(roundTopk(queries, schedule.head)).limit(0)
     else parts.reduce(_ unionByName _)
   }
 }

@@ -45,11 +45,14 @@ object Pipeline {
   /** [[writeSnapshot]] plus the read-back frame over the snapshot's own
     * committed subtree — so callers that need a second derivation from
     * the files actually written (mergeSnapshot's tombstone keys) reuse
-    * the one directory open instead of re-listing it (r06). */
+    * the one directory open instead of re-listing it (r06). The read-back
+    * is None for an empty batch: it writes no snapshot directory and
+    * commits an empty snapshot — no data files, no manifest rows, only its
+    * log line. */
   private def writeSnapshotReturningWritten(
       df: DataFrame, tableDir: String, snapshotId: Long,
       keyCol: String, bytesCol: String,
-      filesPerBucket: Int): (DataFrame, DataFrame) = {
+      filesPerBucket: Int): (DataFrame, Option[DataFrame]) = {
     val spark = df.sparkSession
     val data = df.withColumn("snapshot_id", lit(snapshotId))
     // snapshot_id leads the partition spec so each snapshot owns its own
@@ -63,13 +66,20 @@ object Pipeline {
     // read the just-written snapshot's own subtree, not the table root: a
     // root read lists EVERY snapshot's partition directories before the
     // filter prunes — O(table history) per commit on a long-lived table
-    val written = spark.read.parquet(s"$tableDir/data/snapshot_id=$snapshotId")
-      // partition-column types are inferred from directory names (int vs
-      // long depends on the values present) — pin them so manifests from
-      // different snapshots always share one schema
-      .withColumn("bucket", col("bucket").cast("long"))
-    val manifest = manifestOf(written, snapshotId, keyCol, bytesCol)
-    manifest.write.mode(SaveMode.Append).parquet(s"$tableDir/manifests")
+    val snapDir = new org.apache.hadoop.fs.Path(
+      s"$tableDir/data/snapshot_id=$snapshotId")
+    val written =
+      if (!snapDir.getFileSystem(spark.sessionState.newHadoopConf())
+          .exists(snapDir)) None
+      else Some(spark.read.parquet(snapDir.toString))
+    // partition-column types are inferred from directory names (int vs
+    // long depends on the values present) — pin them so manifests from
+    // different snapshots always share one schema
+    val manifest = manifestOf(written.getOrElse(data.limit(0))
+      .withColumn("bucket", col("bucket").cast("long")),
+      snapshotId, keyCol, bytesCol)
+    if (written.nonEmpty)
+      manifest.write.mode(SaveMode.Append).parquet(s"$tableDir/manifests")
     // snapshot log (Iceberg-style metadata trail)
     appendLogLine(tableDir,
       s"""{"snapshot_id":$snapshotId,"ts":${System.currentTimeMillis()}}""")
@@ -203,10 +213,10 @@ object Pipeline {
     // (sampled/recomputed-after-retry) could otherwise tombstone a
     // different key set than it appended, leaving duplicate versions or
     // silently deleting un-replaced rows
-    val dels = written
+    written.foreach(_
       .select(col(mergeKeyCol).cast("string").as("del_key")).distinct()
       .withColumn("delete_snapshot", lit(snapshotId))
-    dels.write.mode(SaveMode.Append).parquet(s"$tableDir/deletes")
+      .write.mode(SaveMode.Append).parquet(s"$tableDir/deletes"))
     appendLogLine(tableDir,
       s"""{"merge_snapshot":$snapshotId,"ts":${System.currentTimeMillis()}}""")
     manifest

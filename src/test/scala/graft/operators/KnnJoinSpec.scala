@@ -135,4 +135,29 @@ class KnnJoinSpec extends AnyFunSuite {
     assert(out.groupBy(_._1).forall { case (_, rows) =>
       rows.map(_._3).toSet == Set(1L, 2L) })
   }
+
+  test("planar kNN: dataset smaller than k returns the partial top-k") {
+    val pts = Seq((1L, 10.0, 20.0), (2L, 30.0, -40.0)).toDF("pid", "lon", "lat")
+    val qs = Seq((1L, 0.0, 0.0), (2L, 170.0, 60.0)).toDF("qid", "qlon", "qlat")
+    val out = Knn.knnJoin(pts, qs, k = 5, res = 10.0, tieCols = Seq("pid"))
+      .select("qid", "rank", "pid").as[(Long, Int, Long)].collect()
+    // the last ring round retires every query with the points it found
+    assert(out.length == 4)
+    assert(out.groupBy(_._1).forall { case (_, rows) =>
+      rows.map(_._3).toSet == Set(1L, 2L) })
+  }
+
+  test("empty query set: every kNN join returns zero rows with its columns") {
+    val pts = Seq((1L, 10.0, 20.0), (2L, 30.0, -40.0)).toDF("pid", "lon", "lat")
+    val qs = Seq.empty[(Long, Double, Double)].toDF("qid", "qlon", "qlat")
+    val outs = Seq(
+      "dist2" -> Knn.knnJoin(pts, qs, k = 3, res = 10.0, tieCols = Seq("pid")),
+      "dist_m" -> Knn.knnMetersJoin(pts, qs, k = 3, tieCols = Seq("pid")),
+      "dist_m" -> Knn.knnMetersJoinAdaptive(pts, qs, k = 3, tieCols = Seq("pid")))
+    outs.foreach { case (dist, out) =>
+      assert(out.columns.toSet == Set("pid", "lon", "lat", "qid", "rank", dist),
+        out.columns.mkString(","))
+      assert(out.count() == 0)
+    }
+  }
 }

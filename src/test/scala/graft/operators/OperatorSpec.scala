@@ -286,7 +286,8 @@ class OperatorSpec extends AnyFunSuite {
     val queries = (0 until 10).map { n =>
       (n.toLong, n * 31.7 - 150.0, (n * 17.3) % 120.0 - 60.0)
     }
-    val got = Knn.knn(ptsDf, queries, k = 4, res = 5.0, tieCols = Seq("pid"))
+    val got = Knn.knnJoin(ptsDf, queries.toDF("qid", "qlon", "qlat"), k = 4,
+        res = 5.0, tieCols = Seq("pid"))
       .select("qid", "rank", "pid").as[(Long, Int, Long)].collect()
       .map(r => (r._1, r._2.toLong, r._3)).toSet
 

@@ -270,6 +270,37 @@ class PipelineSpec extends AnyFunSuite {
     assert(asOf1.filter(col("caption").startsWith("v2_")).count() == 0)
   }
 
+  test("runResumable over a fully manifested table commits an empty snapshot") {
+    val dir = freshDir("resume_empty")
+    val images = ImagesTable.generate(spark, 500L)
+    val (_, n1) = Pipeline.runResumable(images, "lon", "lat", dir, 1L)(identity)
+    assert(n1 == 500L)
+    val (m2, n2) = Pipeline.runResumable(images, "lon", "lat", dir, 2L)(identity)
+    assert(n2 == 0L && m2.count() == 0L)
+    assert(Pipeline.readSnapshot(spark, dir, 2L).count() == 500L)
+    assert(spark.read.parquet(s"$dir/manifests")
+      .filter(col("snapshot_id") === 2L).count() == 0L)
+    val log = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(dir, "snapshots.jsonl"))
+    assert(log.size == 2 && log.get(1).startsWith("""{"snapshot_id":2,"""))
+  }
+
+  test("an empty mergeSnapshot leaves readCurrent unchanged") {
+    val dir = freshDir("merge_empty")
+    val images = Pipeline.withBucket(
+      ImagesTable.generate(spark, 500L), "lon", "lat", zoom = 3)
+    Pipeline.writeSnapshot(images, dir, 1L)
+    Pipeline.mergeSnapshot(images.filter(col("image_id") < "img000000100")
+      .withColumn("caption", lit("v2")), dir, 2L, mergeKeyCol = "image_id")
+    def current() = Pipeline.readCurrent(spark, dir)
+      .select("image_id", "caption", "snapshot_id").collect().toSet
+    val before = current()
+    val m = Pipeline.mergeSnapshot(images.filter(lit(false)), dir, 3L,
+      mergeKeyCol = "image_id")
+    assert(m.count() == 0L)
+    assert(current() == before && before.size == 500)
+  }
+
   test("deleteWhere tombstones current rows; compaction applies and retires them") {
     val dir = freshDir("rowdel")
     val images = Pipeline.withBucket(
