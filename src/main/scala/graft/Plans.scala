@@ -26,9 +26,13 @@ object Plans {
     val imagesPq = spark.read.parquet(imgPath)
     val polys = ImagesTable.polygonLayer(spark)
 
+    // scan locations print relative to the working directory, so the file
+    // does not change with the checkout path
+    val cwd = Paths.get("").toAbsolutePath.toString
     def fmt(df: DataFrame): String = {
       val qe = df.queryExecution
       qe.explainString(org.apache.spark.sql.execution.FormattedMode)
+        .replace(s"file:$cwd/", "file:./")
     }
 
     val sections = Seq(

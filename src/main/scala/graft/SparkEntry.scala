@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.core.Geohash
 import graft.operators.{Ann, Cluster, Dedup, Knn, Sampling, SpatialJoins, TextRank, TileRender}
 import graft.pipeline.Pipeline
-import graft.plans.FilterPin
+import graft.plans.Barrier
 import graft.sources.ImagesTable
 import graft.sql.Geo
 
@@ -41,6 +41,7 @@ object SparkEntry {
       spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
     }
     par(spark.table("lineitem")).createOrReplaceTempView("lineitem_par")
+    Barrier(spark.table("lineitem_par")).createOrReplaceTempView("lineitem_par_barrier")
     par(spark.table("documents")).createOrReplaceTempView("documents_par")
     prepped.put(spark, dir)
   }
@@ -352,11 +353,11 @@ object SparkEntry {
         """st_aswkb(st_casttype(st_casttype(st_point(lon, lat), 'multipoint'), 'point'))
           |      = st_aswkb(st_point(lon, lat))
           |  AND st_aswkt(st_geomfromwkb(st_aswkb(st_point(lon, lat)))) = st_aswkt(st_point(lon, lat))""".stripMargin
-      // pinned ABOVE lineitem_par's repartition: pushdown would sink the
+      // held ABOVE lineitem_par's repartition: pushdown would sink the
       // whole cast/format chain into the raw file's single scan task (r06)
-      s.sql(s"""WITH pts AS (${ptsCteOn("lineitem_par")})
+      s.sql(s"""WITH pts AS (${ptsCteOn("lineitem_par_barrier")})
         |SELECT count(*) AS n FROM pts
-        |WHERE ${FilterPin.sql(roundTrips)}
+        |WHERE $roundTrips
         |""".stripMargin)
     }, Some(
       "SELECT count(*) AS n FROM lineitem")),
@@ -381,10 +382,10 @@ object SparkEntry {
           |  AND st_aswkb(st_fromnative(st_tonative(st_point(lon, lat),
           |        'point', 'xy', 'interleaved'), 'point', 'xy', 'interleaved'))
           |      = st_aswkb(st_point(lon, lat))""".stripMargin
-      // pinned above the repartition — same reason as q16
-      s.sql(s"""WITH pts AS (${ptsCteOn("lineitem_par")})
+      // held above the repartition — same reason as q16
+      s.sql(s"""WITH pts AS (${ptsCteOn("lineitem_par_barrier")})
         |SELECT count(*) AS n FROM pts
-        |WHERE ${FilterPin.sql(roundTrips)}
+        |WHERE $roundTrips
         |""".stripMargin)
     }, Some(
       "SELECT count(*) AS n FROM lineitem")),
@@ -586,15 +587,15 @@ object SparkEntry {
       // planner (r06): the interior filter used to be pushed BELOW the
       // DISTINCT with the cell-id expression inlined (cellIdXyz ~6x and
       // cellNeighbors 1x PER INPUT ROW instead of per distinct cell). The
-      // neighbor array is now computed per distinct cell, in the filter
-      // and again for the explode; the filter is pinned above the
-      // distinct.
+      // barrier holds the filter above the distinct and its neighbor
+      // projection, so the neighbor array is computed once per distinct
+      // cell and read by both the filter and the explode.
       val cells = s.sql(s"""WITH pts AS (${xyzCteOn("lineitem_par")})
         |SELECT DISTINCT st_cellidxyz(x, y, z, 8) AS c FROM pts""".stripMargin)
-      cells
-        .select(col("c"), call_function("st_cellneighbors", col("c")).as("__n"))
-        .filter(FilterPin(expr("forall(__n, n -> shiftrightunsigned(n, 61) = " +
-          "shiftrightunsigned(c, 61))")))
+      Barrier(cells
+          .select(col("c"), call_function("st_cellneighbors", col("c")).as("__n")))
+        .filter(expr("forall(__n, n -> shiftrightunsigned(n, 61) = " +
+          "shiftrightunsigned(c, 61))"))
         .select(col("c"), posexplode(col("__n")))
         .select(col("c"), col("pos").cast("int").as("idx"),
           col("col").as("nbr"))
@@ -2410,10 +2411,9 @@ object SparkEntry {
       // pixel-math scalings are exact — the reduction is bit-identical to
       // re-rendering each level from scratch). The oracle re-derives all
       // three levels from raw coordinates by the same shifts.
-      // parallel scan (r06): the raw lineitem file is one row group — one
-      // task would run the whole projection + world-pixel kernel chain
-      val pts = s.sql(
-        s"WITH pts AS (${ptsCteOn("lineitem_par")}) SELECT lon, lat FROM pts")
+      // deliberately raw scan (r06): the spread put a RoundRobin exchange
+      // under the partial pixel aggregate and regressed the driver run
+      val pts = s.sql(s"WITH pts AS ($PtsCte) SELECT lon, lat FROM pts")
       TileRender.renderPyramid(pts, "lon", "lat",
           minZoom = 2, maxZoom = 4, size = 256)
         .selectExpr("z", "x AS tx", "y AS ty",
@@ -3258,11 +3258,10 @@ object SparkEntry {
       // more than it saves on a single-shot run (driver-measured; same
       // finding as q22/q97/q103)
       val pts = s.sql(s"WITH pts AS ($PtsCte) SELECT lon, lat FROM pts")
-      SpatialJoins.assignTiles(pts, "lon", "lat", zoom = 8)
-        .selectExpr("st_quadkey(tile_id) AS qk", "tile_id")
-        // pinned (r06) to keep qk from being inlined into the filter; it
-        // is inlined anyway, a pin does not hold above a projection
-        .where(FilterPin.sql("st_quadkeytile(qk) = tile_id"))
+      // the barrier keeps the quadkey codec out of the filter
+      Barrier(SpatialJoins.assignTiles(pts, "lon", "lat", zoom = 8)
+          .selectExpr("st_quadkey(tile_id) AS qk", "tile_id"))
+        .where("st_quadkeytile(qk) = tile_id")
         .groupBy("qk").agg(count(lit(1)).as("n"))
         .orderBy("qk")
     }, Some(
@@ -3289,16 +3288,15 @@ object SparkEntry {
       // window over the same order and replays the length fold on them.
       val pings0 = s.sql(TrackPingsCte).where("entity < 120")
       val pings = pings0.unionAll(pings0)
-      graft.operators.Trajectory
-        .buildTracks(pings, "entity", "ts", "tie", "lon", "lat")
-        .selectExpr("entity", "st_npoints(track) AS np_before",
-          "st_npoints(st_removerepeatedpoints(track)) AS np_after",
-          "st_length(st_removerepeatedpoints(track)) AS len",
-          "st_length(track) AS len_dup")
-        // pinned (r06) to keep the track construction and both length
-        // folds out of the filter; they are inlined anyway, a pin does not
-        // hold above a projection
-        .where(FilterPin(col("len_dup") === col("len")))
+      // the barrier keeps the track construction and both length folds
+      // out of the filter, which compares the projected lengths
+      Barrier(graft.operators.Trajectory
+          .buildTracks(pings, "entity", "ts", "tie", "lon", "lat")
+          .selectExpr("entity", "st_npoints(track) AS np_before",
+            "st_npoints(st_removerepeatedpoints(track)) AS np_after",
+            "st_length(st_removerepeatedpoints(track)) AS len",
+            "st_length(track) AS len_dup"))
+        .where(col("len_dup") === col("len"))
         .drop("len_dup")
         .orderBy("entity")
     }, Some(

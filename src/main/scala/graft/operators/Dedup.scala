@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.FilterPin
+import graft.plans.Barrier
 import graft.sql.Geo
 
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -349,16 +349,14 @@ object Dedup {
       if (!normalize) col(textCol)
       else trim(regexp_replace(regexp_replace(lower(col(textCol)),
         lit("[\\p{Punct}]"), lit(" ")), lit("\\s+"), lit(" ")))
-    // the size filter is pinned (r06) to keep the normalize+split chain
-    // out of it; a pin does not hold above the tokenization project, so
-    // the chain is inlined anyway
-    def grams(df: DataFrame): DataFrame = df
-      .withColumn("__t", split(textExpr, " "))
-      .filter(FilterPin(size(col("__t")) >= n))
-      .select(col(idCol), explode(expr(
-        s"transform(sequence(0, size(__t) - $n), " +
-          s"i -> md5(concat_ws(' ', slice(__t, i + 1, $n))))")).as("gram"))
-      .distinct()
+    // the barrier keeps the normalize+split chain out of the size filter
+    def grams(df: DataFrame): DataFrame =
+      Barrier(df.withColumn("__t", split(textExpr, " ")))
+        .filter(size(col("__t")) >= n)
+        .select(col(idCol), explode(expr(
+          s"transform(sequence(0, size(__t) - $n), " +
+            s"i -> md5(concat_ws(' ', slice(__t, i + 1, $n))))")).as("gram"))
+        .distinct()
     val benchGrams = grams(benchmark).select("gram").distinct()
     grams(corpus).join(broadcast(benchGrams), "gram")
       .groupBy(col(idCol))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.FilterPin
+import graft.plans.Barrier
 import graft.sql.Geo
 
 /** Training-sequence packing: assign each document to a fixed-budget
@@ -54,12 +54,11 @@ object Packing {
     require(clash.isEmpty,
       s"input columns ${clash.mkString(",")} collide with chunkText outputs")
     val toks = filter(split(col(textCol), " "), t => t =!= "")
-    df
-      .withColumn("__toks", toks)
-      .withColumn("__n", size(col("__toks")))
-      // pinned (r06) to keep the split+filter chain out of the filter; a
-      // pin does not hold above the tokenize project, so it is inlined
-      .where(FilterPin(col("__n") > 0))
+    // the barrier keeps the split+filter chain out of the filter
+    Barrier(df
+        .withColumn("__toks", toks)
+        .withColumn("__n", size(col("__toks"))))
+      .where(col("__n") > 0)
       .select(col("*"), posexplode(expr(
         s"transform(sequence(0, CAST(ceil(__n / $maxTokens.0D) AS INT) - 1), " +
           s"i -> array_join(slice(__toks, i * $maxTokens + 1, $maxTokens), ' '))"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.plans.FilterPin
+import graft.plans.Barrier
 import graft.sql.Geo
 
 /** Spatial join operators (SURVEY.md §2C): point-in-polygon via cell-cover
@@ -135,15 +135,14 @@ object SpatialJoins {
           env("xmax") + d, env("ymax") + d)),
         lit(zoom))
     }
-    // emptiness filters pinned (r06) to keep an upstream geometry
-    // construction (tracks, buffers) out of the filter; a pin does not
-    // hold above a projection, so a projected geometry is inlined anyway
-    val l = left
-      .where(FilterPin(!call_function("st_isempty", col(leftGeomCol))))
+    // the barriers keep an upstream geometry construction (tracks,
+    // buffers) out of the emptiness filters
+    val l = Barrier(left)
+      .where(!call_function("st_isempty", col(leftGeomCol)))
       .withColumn("__lcover", coverExpanded(col(leftGeomCol), maxDist))
       .withColumn("__jtile", explode(col("__lcover")))
-    val r0 = right
-      .where(FilterPin(!call_function("st_isempty", col(rightGeomCol))))
+    val r0 = Barrier(right)
+      .where(!call_function("st_isempty", col(rightGeomCol)))
       .withColumn("__rcover", coverExpanded(col(rightGeomCol), 0.0))
       .withColumn("__rtile", explode(col("__rcover")))
     val r = if (broadcastRight) broadcast(r0) else r0

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -127,7 +127,7 @@ object Pipeline {
     * Files.writeString APPEND, whose concurrent appends could tear. */
   private[pipeline] def appendLogLine(tableDir: String, line: String): Unit =
     logLock.synchronized {
-      val dir = Paths.get(tableDir)
+      val dir = localDir(tableDir)
       Files.createDirectories(dir)
       val ch = java.nio.channels.FileChannel.open(
         dir.resolve("snapshots.jsonl"), StandardOpenOption.CREATE,
@@ -137,13 +137,25 @@ object Pipeline {
       finally ch.close()
     }
 
+  /** The table directory as a local `java.nio` path, for the log,
+    * existence checks and compaction swaps, which run on the driver's
+    * filesystem. A `file:` URI resolves to its path (`Paths.get` would
+    * read `file:/t` as the relative `./file:/t`); any other scheme is
+    * refused rather than answered from the wrong directory. */
+  private def localDir(tableDir: String): Path = {
+    val uri = new org.apache.hadoop.fs.Path(tableDir).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"Pipeline needs a local table directory, got $tableDir")
+    Paths.get(uri.getPath)
+  }
+
   /** Buckets already committed across all snapshots of the table. */
   def processedBuckets(spark: SparkSession, tableDir: String): DataFrame = {
-    val path = s"$tableDir/manifests"
-    if (!Files.exists(Paths.get(path.replace("file:", "")))) {
+    val path = localDir(tableDir).resolve("manifests")
+    if (!Files.exists(path)) {
       import spark.implicits._
       Seq.empty[Long].toDF("bucket")
-    } else spark.read.parquet(path).select("bucket").distinct()
+    } else spark.read.parquet(path.toString).select("bucket").distinct()
   }
 
   /** Resume: drop the input rows whose bucket is already manifested. The
@@ -250,9 +262,9 @@ object Pipeline {
   def readCurrent(spark: SparkSession, tableDir: String,
                   asOf: Long = Long.MaxValue,
                   keyCol: String = "image_id"): DataFrame = {
+    val delPath = localDir(tableDir).resolve("deletes")
     val data = spark.read.parquet(s"$tableDir/data")
       .filter(col("snapshot_id") <= asOf)
-    val delPath = Paths.get(tableDir, "deletes")
     if (!Files.exists(delPath)) data
     else dropTombstoned(data, tombstones(spark, delPath.toString, asOf), keyCol)
   }
@@ -325,8 +337,9 @@ object Pipeline {
                        keyCol: String = "image_id",
                        bytesCol: String = "bytes"): DataFrame = {
     import java.nio.file.{Files => F}
-    val dataDir = Paths.get(tableDir, "data")
-    val delDir = Paths.get(tableDir, "deletes")
+    val root = localDir(tableDir)
+    val dataDir = root.resolve("data")
+    val delDir = root.resolve("deletes")
     // 1. rewrite the squashed range, partitioned by bucket only, to a temp
     // subtree (reads prune to snapshot_id<=N directories — PartitionFilters).
     // Equality tombstones at or below the squash point are APPLIED here
@@ -343,7 +356,7 @@ object Pipeline {
       else dropTombstoned(raw,
         tombstones(spark, delDir.toString, upToSnapshotId), keyCol)
     val base = applied.drop("snapshot_id")
-    val tmp = Paths.get(tableDir, s"compact_tmp_$upToSnapshotId")
+    val tmp = root.resolve(s"compact_tmp_$upToSnapshotId")
     byBucket(base, filesPerBucket)
       .write.mode(SaveMode.Overwrite).partitionBy("bucket")
       .parquet(tmp.toString)
@@ -354,7 +367,7 @@ object Pipeline {
     // (recoverable from the aside dir) and the compacted tree on disk —
     // never a window where neither exists. On an object store the swap
     // becomes the catalog's atomic metadata pointer flip.
-    val aside = Paths.get(tableDir, s"compact_aside_$upToSnapshotId")
+    val aside = root.resolve(s"compact_aside_$upToSnapshotId")
     F.createDirectories(aside)
     val expired = F.list(dataDir).toArray.map(_.asInstanceOf[java.nio.file.Path])
       .filter { p =>
@@ -379,8 +392,8 @@ object Pipeline {
     // append traffic during compaction means the maintenance job is
     // racing live writers and should back off (on an object store this
     // whole block is the catalog's CAS commit).
-    val manifestsDir = Paths.get(tableDir, "manifests")
-    val mTmp = Paths.get(tableDir, s"manifests_tmp_$upToSnapshotId")
+    val manifestsDir = root.resolve("manifests")
+    val mTmp = root.resolve(s"manifests_tmp_$upToSnapshotId")
     fencedRewrite(manifestsDir, mTmp, aside.resolve("manifests_old"),
       "manifests", onFirstAttempt = beforeManifestSwap,
       afterFenceSeam = afterFence) { () =>
@@ -420,7 +433,7 @@ object Pipeline {
     // (snapshot ids are monotonic), so the reconcile's verbatim move is
     // exactly what the filter would have kept.
     if (tombstonesApplied) {
-      val dTmp = Paths.get(tableDir, s"deletes_tmp_$upToSnapshotId")
+      val dTmp = root.resolve(s"deletes_tmp_$upToSnapshotId")
       fencedRewrite(delDir, dTmp, aside.resolve("deletes_old"),
         "deletes") { () =>
         spark.read.parquet(delDir.toString)
@@ -493,7 +506,7 @@ object Pipeline {
 
   /** Data-file count of the table (compaction's before/after metric). */
   def dataFileCount(tableDir: String): Int = {
-    val root = Paths.get(tableDir, "data")
+    val root = localDir(tableDir).resolve("data")
     if (!Files.exists(root)) return 0
     val s = Files.walk(root)
     try s.filter(p => p.getFileName.toString.endsWith(".parquet")).count().toInt

@@ -8,9 +8,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
 
 import graft.sql.Geo
 
-/** `spark.sql.extensions`-style integration: registers every engine function
-  * and the engine's optimizer rules at session build — the idiomatic
-  * deployment path (`--conf spark.sql.extensions=graft.plans.GraftExtensions`).
+/** `spark.sql.extensions`-style integration: registers every engine function,
+  * the engine's optimizer rules and [[BarrierStrategy]] at session build —
+  * the idiomatic deployment path
+  * (`--conf spark.sql.extensions=graft.plans.GraftExtensions`).
   * `Geo.register(spark)` remains the runtime path for externally-built
   * sessions (the Verify/Bench mains use it).
   *
@@ -28,6 +29,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         (args: Seq[Expression]) => builder(args)))
     }
     GraftExtensions.optimizerRules.foreach(r => ext.injectOptimizerRule(_ => r))
+    ext.injectPlannerStrategy(_ => BarrierStrategy)
     // analysis-time check: aliases (and their column metadata) are intact
     // here — the optimizer's CollapseProject would inline them away
     ext.injectCheckRule(_ => plan => PlanarEdgesGuard.check(plan))

@@ -399,28 +399,29 @@ object ArrowIpc {
     * native nested layout; [[readGeo]] decodes them. */
   def read(spark: SparkSession, path: String,
            requireSuccess: Boolean = true,
-           maxBatchesPerTask: Int = 0): DataFrame =
-    readWith(spark, path, requireSuccess, confEntries(spark),
-      arrowSchema = None, maxBatchesPerTask = maxBatchesPerTask)
+           maxBatchesPerTask: Int = 0): DataFrame = {
+    val entries = confEntries(spark)
+    scan(spark, path, requireSuccess, entries,
+      arrowSchemaWith(path, toConf(entries)), maxBatchesPerTask)
+  }
 
-  private def readWith(spark: SparkSession, path: String,
-                       requireSuccess: Boolean,
-                       entries: Map[String, String],
-                       arrowSchema: Option[ArrowSchema],
-                       maxBatchesPerTask: Int = 0): DataFrame = {
-    val conf = toConf(entries)
+  /** The `arrowipc` DataSourceV2 scan over `path` with the schema the
+    * caller already fetched (no second schema read). The `_SUCCESS` check
+    * runs here, eagerly, as well as when the scan is planned. */
+  private def scan(spark: SparkSession, path: String,
+                   requireSuccess: Boolean,
+                   entries: Map[String, String],
+                   arrowSchema: ArrowSchema,
+                   maxBatchesPerTask: Int): DataFrame = {
     // a markerless directory is (likely) a job that died mid-write — the
     // task-commit renames keep files whole, but not the file SET; foreign
     // directories (pyarrow dumps) pass requireSuccess = false explicitly
     if (requireSuccess) checkSuccessMarker(path, entries)
-    val sparkSchema = toSparkSchema(
-      arrowSchema.getOrElse(arrowSchemaWith(path, conf)))
-    val splits = planSplits(path, entries, maxBatchesPerTask)
-    val rdd = spark.sparkContext.parallelize(splits, math.max(splits.size, 1))
-      .flatMap { case (file, from, until) =>
-        readFileRows(file, sparkSchema, entries, from, until)
-      }
-    spark.createDataFrame(rdd, sparkSchema)
+    spark.read.format("arrowipc")
+      .schema(toSparkSchema(arrowSchema))
+      .option("requireSuccess", requireSuccess)
+      .option("maxBatchesPerTask", maxBatchesPerTask)
+      .load(path)
   }
 
   /** Task splits for a dataset: default one task per file (parquet
@@ -428,7 +429,7 @@ object ArrowIpc {
     * additionally splits FILE-format parts at record-batch boundaries
     * (footer-only read per file at plan time) so one fat part can't
     * serialize a stage — the stream format has no footer and never
-    * splits. Shared by [[read]] and the `arrowipc` DataSourceV2 scan. */
+    * splits. Planned by the `arrowipc` DataSourceV2 scan. */
   private[sources] def planSplits(path: String, entries: Map[String, String],
                  maxBatchesPerTask: Int): Seq[(String, Int, Int)] = {
     val files = listIpcFiles(path, toConf(entries))
@@ -645,7 +646,8 @@ object ArrowIpc {
     val entries = confEntries(spark)
     val schema = arrowSchemaWith(path, toConf(entries))
     val metaByCol = fieldMetadataOf(schema)
-    var df = readWith(spark, path, requireSuccess, entries, Some(schema))
+    var df = scan(spark, path, requireSuccess, entries, schema,
+      maxBatchesPerTask = 0)
     metaByCol.foreach { case (name, meta) =>
       meta.get("ARROW:extension:name")
         .filter(_.startsWith("geoarrow.")).foreach { extName =>

@@ -539,6 +539,8 @@ object Geo {
         spark.experimental.extraOptimizations ++=
           graft.plans.GraftExtensions.optimizerRules :+ graft.plans.PlanarEdgesGuard
       }
+      if (!spark.experimental.extraStrategies.contains(graft.plans.BarrierStrategy))
+        spark.experimental.extraStrategies :+= graft.plans.BarrierStrategy
       // InferFiltersFromGenerate adds `size(cover) > 0 AND isnotnull(cover)`
       // above every cover/cell explode; predicate pushdown then inlines the
       // WHOLE cover kernel (boxToPolygon + tileCover static_invokes) into a

@@ -270,6 +270,31 @@ class PipelineSpec extends AnyFunSuite {
     assert(asOf1.filter(col("caption").startsWith("v2_")).count() == 0)
   }
 
+  test("a file: URI table reads the same rows as its plain path") {
+    val images = Pipeline.withBucket(
+      ImagesTable.generate(spark, 500L), "lon", "lat", zoom = 3)
+    val upd = images.filter(col("image_id") < "img000000100")
+      .withColumn("caption", lit("v2"))
+    def current(tableDir: String): Seq[String] = Pipeline.readCurrent(spark, tableDir)
+      .select("image_id", "caption").collect().map(_.toString).sorted.toSeq
+    def writeAndMerge(tableDir: String): Seq[String] = {
+      Pipeline.writeSnapshot(images, tableDir, 1L)
+      Pipeline.mergeSnapshot(upd, tableDir, 2L, mergeKeyCol = "image_id")
+      current(tableDir)
+    }
+    val plain = writeAndMerge(freshDir("uri_plain"))
+    val dir = freshDir("uri")
+    val uri = s"file:$dir"
+    assert(plain.size == 500 && writeAndMerge(uri) == plain)
+    // the snapshot log lands in the table directory, and compaction runs
+    assert(java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(dir, "snapshots.jsonl")).size == 3)
+    Pipeline.compactSnapshots(spark, uri, 2L)
+    assert(current(uri) == plain && Pipeline.dataFileCount(uri) > 0)
+    // a table the driver's filesystem calls cannot reach is refused
+    intercept[IllegalArgumentException](current("nosuchfs://host/t"))
+  }
+
   test("runResumable over a fully manifested table commits an empty snapshot") {
     val dir = freshDir("resume_empty")
     val images = ImagesTable.generate(spark, 500L)

@@ -1,7 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{ArrayForAll, EqualTo, Expression,
+  GreaterThan, Size, StringSplit}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Repartition}
+import org.apache.spark.sql.execution.{FilterExec, ProjectExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -179,26 +184,152 @@ class PlanSpec extends AnyFunSuite {
     assert(proj.linesIterator.count(_.contains("WindowGroupLimit")) >= 2, proj)
   }
 
-  test("FilterPin keeps a derived-column filter above the repartition") {
-    val derived = spark.range(0, 1000).repartition(4)
-      .withColumn("d", col("id") * 7 % 10)
-    def optimized(pred: Column): LogicalPlan =
-      derived.filter(pred).queryExecution.optimizedPlan
+  /** Calls to the `GeoOps` kernel `fn` in `es`. */
+  private def calls(es: Seq[Expression], fn: String): Int =
+    es.map(_.collect { case GeoCall(`fn`, _) => () }.size).sum
+
+  /** Calls to the `GeoOps` kernel `fn` anywhere in `plan`. */
+  private def kernelCalls(plan: SparkPlan, fn: String): Int =
+    calls(plan.collect { case p => p.expressions }.flatten, fn)
+
+  /** The physical Filters of `df` (before adaptive execution) whose
+    * condition matches `pick`. */
+  private def filters(df: DataFrame)(pick: Expression => Boolean): Seq[FilterExec] =
+    df.queryExecution.sparkPlan.collect {
+      case f: FilterExec if f.condition.exists(pick) => f
+    }
+
+  /** A session with a small `lineitem` view, its `lineitem_par` spread and
+    * that spread's barrier view (as `SparkEntry.prep` registers them), so
+    * a `SparkEntry` query builds over its real shape. */
+  private lazy val entrySession: SparkSession = {
+    val s = spark.newSession()
+    Geo.register(s)
+    s.range(0, 400).selectExpr("id AS l_orderkey", "id * 3 % 200 AS l_partkey",
+        "id * 7 % 10 AS l_suppkey", "CAST(id % 7 + 1 AS INT) AS l_linenumber",
+        "date_add(DATE'1995-01-01', CAST(id % 90 AS INT)) AS l_shipdate")
+      .createOrReplaceTempView("lineitem")
+    s.table("lineitem").repartition(4).createOrReplaceTempView("lineitem_par")
+    Barrier(s.table("lineitem_par")).createOrReplaceTempView("lineitem_par_barrier")
+    s
+  }
+
+  private def entryQuery(name: String): DataFrame =
+    graft.SparkEntry.specs.find(_.name == name).get.build(entrySession)
+
+  test("a barrier keeps a derived-column filter above the repartition (q16, q18)") {
+    val spread = spark.range(0, 1000).toDF().repartition(4)
+    def derived(df: DataFrame): DataFrame = df.withColumn("d", col("id") * 7 % 10)
     def filterOnRepartition(plan: LogicalPlan): Boolean = plan.exists {
-      case f: Filter => f.child.isInstanceOf[Repartition]
+      case f: Filter => f.child match {
+        case Barrier(_: Repartition) => true
+        case _ => false
+      }
       case _ => false
     }
     def filterUnderRepartition(plan: LogicalPlan): Boolean = plan.exists {
       case r: Repartition => r.child.isInstanceOf[Filter]
       case _ => false
     }
-    // pinned, the Filter sits on the Repartition: above the exchange, but
-    // below the Project that defines `d`, with `d` inlined
-    val pinned = optimized(FilterPin(col("d") > 2))
-    assert(filterOnRepartition(pinned) && !filterUnderRepartition(pinned), pinned)
-    // control: unpinned, the same filter sinks below the repartition
-    val unpinned = optimized(col("d") > 2)
-    assert(filterUnderRepartition(unpinned) && !filterOnRepartition(unpinned),
-      unpinned)
+    // held, the Filter sits on the barrier over the Repartition: above the
+    // exchange, but below the Project that defines `d`, with `d` inlined
+    val held = derived(Barrier(spread)).filter(col("d") > 2)
+    val heldPlan = held.queryExecution.optimizedPlan
+    assert(filterOnRepartition(heldPlan) && !filterUnderRepartition(heldPlan),
+      heldPlan)
+    // the strategy plans the barrier away: the Filter runs on the exchange
+    val onExchange = filters(held)(_ => true)
+    assert(onExchange.size == 1 &&
+      onExchange.head.child.isInstanceOf[ShuffleExchangeExec], held.queryExecution.sparkPlan)
+    assert(held.collect().length == 700)
+    // control: without the barrier the same filter sinks below the repartition
+    val sunk = derived(spread).filter(col("d") > 2).queryExecution.optimizedPlan
+    assert(filterUnderRepartition(sunk) && !filterOnRepartition(sunk), sunk)
+    // projected-column control: a barrier over the projection keeps the
+    // Filter above the Project, reading `d` instead of inlining it
+    val overProject = Barrier(derived(spread)).filter(col("d") > 2)
+    val projected = filters(overProject)(_ => true)
+    assert(projected.size == 1 && projected.head.child.isInstanceOf[ProjectExec] &&
+      projected.head.condition.references.map(_.name).toSet == Set("d"),
+      overProject.queryExecution.sparkPlan)
+    // the q16 and q18 round-trip filters run on lineitem_par's exchange
+    for (name <- Seq("q16_cast_roundtrip", "q18_native_layout")) {
+      val q = entryQuery(name)
+      val f = filters(q) { case GeoCall("asWkb", _) => true; case _ => false }
+      assert(f.size == 1 && f.head.child.isInstanceOf[ShuffleExchangeExec],
+        s"$name:\n${q.queryExecution.sparkPlan}")
+    }
+  }
+
+  test("q29: the interior filter reads the neighbor projection above the distinct") {
+    val q = entryQuery("q29_cell_neighbors")
+    val f = filters(q)(_.isInstanceOf[ArrayForAll])
+    assert(f.size == 1, q.queryExecution.sparkPlan)
+    // the neighbor projection folds into the distinct's result expressions
+    assert(f.head.child.isInstanceOf[HashAggregateExec] &&
+      calls(f.head.child.expressions, "cellNeighbors") == 1,
+      q.queryExecution.sparkPlan)
+    assert(kernelCalls(q.queryExecution.sparkPlan, "cellNeighbors") == 1,
+      q.queryExecution.sparkPlan)
+  }
+
+  test("q144: the round-trip filter reads the projected quadkey") {
+    val q = entryQuery("q144_quadkey")
+    val f = filters(q) { case GeoCall("quadkeyTile", _) => true; case _ => false }
+    assert(f.size == 1 && f.head.child.isInstanceOf[ProjectExec],
+      q.queryExecution.sparkPlan)
+    assert(kernelCalls(q.queryExecution.sparkPlan, "tileQuadkey") == 1,
+      q.queryExecution.sparkPlan)
+  }
+
+  test("q145: the length filter compares the projected lengths") {
+    val q = entryQuery("q145_remove_repeated")
+    val f = filters(q)(_.isInstanceOf[EqualTo])
+    assert(f.size == 1 && f.head.child.isInstanceOf[ProjectExec],
+      q.queryExecution.sparkPlan)
+    assert(f.head.condition.collect { case GeoCall(_, _) => () }.isEmpty,
+      f.head.condition)
+    assert(kernelCalls(q.queryExecution.sparkPlan, "lineFromXY") == 1,
+      q.queryExecution.sparkPlan)
+  }
+
+  test("Dedup.decontaminate: the n-gram size filter reads the tokenized column") {
+    val corpus = spark.range(0, 20)
+      .selectExpr("id", "concat('w', id % 3, ' a b c d e f g h i') AS text")
+    val q = graft.operators.Dedup.decontaminate(corpus, corpus.where("id < 3"),
+      "text", "id", n = 4, normalize = true)
+    val f = filters(q)(_.isInstanceOf[Size])
+    assert(f.size == 2, q.queryExecution.sparkPlan)
+    f.foreach { one =>
+      assert(one.child.isInstanceOf[ProjectExec] &&
+        !one.condition.exists(_.isInstanceOf[StringSplit]), one)
+    }
+    assert(q.count() == 20)
+  }
+
+  test("Packing.chunkText: the empty-document filter reads the token count") {
+    val docs = spark.range(0, 10)
+      .selectExpr("id", "repeat(concat('t', id, ' '), CAST(id AS INT)) AS text")
+    val q = graft.operators.Packing.chunkText(docs, "text", maxTokens = 4)
+    val f = filters(q)(_.isInstanceOf[GreaterThan])
+    assert(f.size == 1 && f.head.child.isInstanceOf[ProjectExec] &&
+      !f.head.condition.exists(_.isInstanceOf[StringSplit]),
+      q.queryExecution.sparkPlan)
+    assert(q.count() == (1 to 9).map(i => (i + 3) / 4).sum)
+  }
+
+  test("hausdorffJoin: the emptiness filters read the projected geometries") {
+    Geo.register(spark)
+    val l = spark.range(0, 4).selectExpr("id",
+      "st_geomfromwkt(concat('LINESTRING (', id * 10, ' 0, ', id * 10 + 1, ' 1)')) AS g")
+    val r = l.selectExpr("id AS id2", "g AS g2")
+    val q = SpatialJoins.hausdorffJoin(l, r, "g", "g2", maxDist = 2.0)
+    val f = filters(q) { case GeoCall("isEmptyGeom", _) => true; case _ => false }
+    assert(f.size == 2, q.queryExecution.sparkPlan)
+    f.foreach { one =>
+      assert(one.child.isInstanceOf[ProjectExec] &&
+        one.condition.collect { case GeoCall(n, _) => n } == Seq("isEmptyGeom"), one)
+    }
+    assert(q.count() == 4)
   }
 }

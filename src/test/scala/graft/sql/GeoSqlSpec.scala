@@ -23,6 +23,16 @@ object SparkTestSession {
 class GeoSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestSession.spark
 
+  test("an extension-built session plans and runs a Barrier frame") {
+    // a new session carries the extension but has not been through
+    // Geo.register, so only the injected strategy can plan the barrier
+    val fresh = spark.newSession()
+    assert(!fresh.experimental.extraStrategies.contains(graft.plans.BarrierStrategy))
+    val df = graft.plans.Barrier(fresh.range(0, 10).toDF().repartition(2))
+      .where(org.apache.spark.sql.functions.col("id") % 2 === 0)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 2L, 4L, 6L, 8L))
+  }
+
   test("wkt roundtrip through SQL") {
     val rows = spark.sql(
       """SELECT st_aswkt(st_geomfromwkt(w)) AS out FROM VALUES
