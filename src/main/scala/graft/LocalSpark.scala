@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The local session the side mains share: `local[cores]`, 64 shuffle
-  * partitions, AQE on, UTC session time zone, no UI, WARN logging. A main
-  * that needs a different value sets it with `spark.conf.set` afterwards.
-  * `Bench` and `Verify` keep their own blocks (the frozen driver
-  * contract). */
+/** The local session the side mains `Profile`, `Plans` and `Scale` share:
+  * `local[cores]`, 64 shuffle partitions, AQE on, UTC session time zone, no
+  * UI, WARN logging. A main that needs a different value sets it with
+  * `spark.conf.set` afterwards. `Bench` and `Verify` keep their own blocks
+  * (the frozen driver contract). */
 object LocalSpark {
   def session(cores: Int, appName: String): SparkSession = {
     val s = SparkSession.builder()
