@@ -108,9 +108,16 @@ object Ann {
     val joined = corpus.crossJoin(broadcast(queries))
       .filter(col(idCol) =!= col(qidCol))
       .withColumn("cos", call_function("vec_cosine", col(vecCol), col(qvecCol)))
+    topKByCos(joined, qidCol, idCol, k)
+  }
+
+  /** The exact rerank every top-k ends on: per query, the `k` rows of
+    * highest `cos` (ties to the lower id) as (qid, rank, id, cos). */
+  private def topKByCos(scored: DataFrame, qidCol: String, idCol: String,
+                        k: Int): DataFrame = {
     val w = Window.partitionBy(col(qidCol))
       .orderBy(col("cos").desc, col(idCol))
-    joined
+    scored
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col(qidCol), col("rank"), col(idCol), col("cos"))
@@ -177,15 +184,11 @@ object Ann {
       .withColumn("__prank", row_number().over(wP))
       .filter(col("__prank") <= k * rerank)
       .select(col(idCol), col(qidCol))
-    val w = Window.partitionBy(col(qidCol))
-      .orderBy(col("cos").desc, col(idCol))
-    candidates
+    topKByCos(candidates
       .join(corpus.select(col(idCol), col(vecCol)), Seq(idCol))
       .join(broadcast(queries.select(col(qidCol), col(qvecCol))), Seq(qidCol))
-      .withColumn("cos", call_function("vec_cosine", col(vecCol), col(qvecCol)))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col("rank"), col(idCol), col("cos"))
+      .withColumn("cos", call_function("vec_cosine", col(vecCol), col(qvecCol))),
+      qidCol, idCol, k)
   }
 
   /** IVF-style approximate top-k: a deterministic centroid codebook (first
@@ -223,14 +226,10 @@ object Ann {
         col(qvecCol), cm, lit(nprobe))))
       .select(col(qidCol), col(qvecCol), col("cid"))
     // inverted-list equi-join + exact rerank
-    val w = Window.partitionBy(col(qidCol))
-      .orderBy(col("cos").desc, col(idCol))
-    assigned.join(broadcast(probes), "cid")
+    topKByCos(assigned.join(broadcast(probes), "cid")
       .filter(col(idCol) =!= col(qidCol))
-      .withColumn("cos", call_function("vec_cosine", col(vecCol), col(qvecCol)))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col("rank"), col(idCol), col("cos"))
+      .withColumn("cos", call_function("vec_cosine", col(vecCol), col(qvecCol))),
+      qidCol, idCol, k)
   }
 
   /** Scalar-quantized (SQ8) approximate top-k: the corpus compressed to
@@ -263,13 +262,9 @@ object Ann {
       .withColumn("__arank", row_number().over(wa))
       .filter(col("__arank") <= k * rerank)
       .select(col(qidCol), col(qvecCol), col(idCol))
-    val w = Window.partitionBy(col(qidCol))
-      .orderBy(col("cos").desc, col(idCol))
-    corpus.select(col(idCol), col(vecCol)).join(broadcast(cand), idCol)
-      .withColumn("cos", call_function("vec_cosine", col(vecCol), col(qvecCol)))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col("rank"), col(idCol), col("cos"))
+    topKByCos(corpus.select(col(idCol), col(vecCol)).join(broadcast(cand), idCol)
+      .withColumn("cos", call_function("vec_cosine", col(vecCol), col(qvecCol))),
+      qidCol, idCol, k)
   }
 
   /** Product-quantization (PQ/ADC) approximate top-k — the compression
@@ -337,13 +332,9 @@ object Ann {
       .withColumn("__arank", row_number().over(wa))
       .filter(col("__arank") <= k * rerank)
       .select(col(qidCol), col(qvecCol), col(idCol))
-    val w = Window.partitionBy(col(qidCol))
-      .orderBy(col("cos").desc, col(idCol))
-    corpus.select(col(idCol), col(vecCol)).join(broadcast(cand), idCol)
-      .withColumn("cos", call_function("vec_cosine", col(vecCol), col(qvecCol)))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col("rank"), col(idCol), col("cos"))
+    topKByCos(corpus.select(col(idCol), col(vecCol)).join(broadcast(cand), idCol)
+      .withColumn("cos", call_function("vec_cosine", col(vecCol), col(qvecCol))),
+      qidCol, idCol, k)
   }
 
   /** LSH-bucketed approximate top-k: candidates share the query's bucket
@@ -365,12 +356,7 @@ object Ann {
     val joined = c.join(broadcast(q), col("__bucket") === col("__probe"))
       .filter(col(idCol) =!= col(qidCol))
       .withColumn("cos", call_function("vec_cosine", col(vecCol), col(qvecCol)))
-    val w = Window.partitionBy(col(qidCol))
-      .orderBy(col("cos").desc, col(idCol))
-    joined
-      .select(col(qidCol), col(idCol), col("cos")).distinct()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col("rank"), col(idCol), col("cos"))
+    topKByCos(joined.select(col(qidCol), col(idCol), col("cos")).distinct(),
+      qidCol, idCol, k)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.plans.CoverKeys
 import graft.sql.Geo
 
 /** Density-based spatial clustering (DBSCAN) as a distributed composition
@@ -58,18 +59,26 @@ object Cluster {
 
     // all ordered neighbor pairs (ida, idb), ida != idb, dist <= eps.
     // Each undirected pair appears in both directions — exactly what the
-    // per-point neighbor count needs, so nothing is emitted twice.
-    val cells = p.withColumn("__cell", call_function("st_gridcell",
-      col("lon"), col("lat"), lit(eps)))
-    val probe = cells
-      .withColumn("__ccell", explode(call_function("st_gridring",
-        col("__cell"), lit(1))))
-      .select(col("id").as("ida"), col("lon").as("alon"),
-        col("lat").as("alat"), col("__ccell"))
-    val pairs = probe.join(
-        cells.select(col("id").as("idb"), col("lon").as("blon"),
-          col("lat").as("blat"), col("__cell")),
-        col("__ccell") === col("__cell") && col("ida") =!= col("idb"))
+    // per-point neighbor count needs, so nothing is emitted twice. The
+    // in-line-keyed cell side has a ninth of the ring side's rows, but
+    // Catalyst's build-side pick varies run to run; so it is broadcast
+    // whenever Catalyst's own size estimate of it (8 B per row plus the
+    // field widths) fits the broadcast threshold. Larger inputs: Catalyst.
+    def cell(lon: String, lat: String) =
+      call_function("st_gridcell", col(lon), col(lat), lit(eps))
+    val (keyed, ringSide, sameCell) = CoverKeys.keyByCover(
+      p, cell("lon", "lat"), p.withColumn("__cell", cell("lon", "lat")),
+      call_function("st_gridring", col("__cell"), lit(1)))
+    val cellSide = keyed.select(col("id").as("idb"), col("lon").as("blon"),
+      col("lat").as("blat"), col("__key"))
+    val cellBytes = p.count() * (8L + cellSide.schema.defaultSize)
+    val fits = cellBytes <=
+      points.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val pairs = ringSide
+      .withColumnsRenamed(Map("id" -> "ida", "lon" -> "alon", "lat" -> "alat"))
+      .drop("__cell")
+      .join(if (fits) broadcast(cellSide) else cellSide,
+        sameCell && col("ida") =!= col("idb"))
       .filter((col("alon") - col("blon")) * (col("alon") - col("blon")) +
         (col("alat") - col("blat")) * (col("alat") - col("blat"))
         <= lit(eps * eps))

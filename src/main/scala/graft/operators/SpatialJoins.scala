@@ -3,11 +3,12 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.plans.Barrier
+import graft.plans.{Barrier, CoverKeys}
 import graft.sql.Geo
 
 /** Spatial join operators (SURVEY.md §2C): point-in-polygon via cell-cover
-  * equi-join + exact ray-cast refine, and raster-tile assignment.
+  * equi-join + exact ray-cast refine, and raster-tile assignment. Every
+  * join keys its sides through [[CoverKeys]], as `SpatialJoinRewrite` does.
   *
   * Plan shape at scale:
   *  - polygons explode to their tile/cell cover -> (key, poly). The cover is
@@ -33,17 +34,13 @@ object SpatialJoins {
               lonCol: String, latCol: String, zoom: Int = 7,
               broadcastPolys: Boolean = true): DataFrame = {
     Geo.register(points.sparkSession)
-    val exploded = polygons
-      .withColumn("__tile", explode(call_function("st_tilecover",
-        col(polyCol), lit(zoom))))
-    val dimSide = if (broadcastPolys) broadcast(exploded) else exploded
-    points
-      .withColumn("__ptile", call_function("st_tilezxy",
-        col(lonCol).cast("double"), col(latCol).cast("double"), lit(zoom)))
-      .join(dimSide, col("__ptile") === col("__tile") &&
-        call_function("st_containsxy", col(polyCol),
-          col(lonCol).cast("double"), col(latCol).cast("double")))
-      .drop("__ptile", "__tile")
+    val (lon, lat) = (col(lonCol).cast("double"), col(latCol).cast("double"))
+    val (pts, polys, onTile) = CoverKeys.keyByCover(
+      points, call_function("st_tilezxy", lon, lat, lit(zoom)),
+      polygons, call_function("st_tilecover", col(polyCol), lit(zoom)))
+    pts.join(if (broadcastPolys) broadcast(polys) else polys,
+        onTile && call_function("st_containsxy", col(polyCol), lon, lat))
+      .drop(CoverKeys.columns: _*)
   }
 
   /** Same, keyed by S2-style cells instead of mercator tiles. */
@@ -51,17 +48,13 @@ object SpatialJoins {
                    lonCol: String, latCol: String, level: Int = 8,
                    broadcastPolys: Boolean = true): DataFrame = {
     Geo.register(points.sparkSession)
-    val exploded = polygons
-      .withColumn("__cell", explode(call_function("st_cellcover",
-        col(polyCol), lit(level))))
-    val dimSide = if (broadcastPolys) broadcast(exploded) else exploded
-    points
-      .withColumn("__pcell", call_function("st_cellid",
-        col(lonCol).cast("double"), col(latCol).cast("double"), lit(level)))
-      .join(dimSide, col("__pcell") === col("__cell") &&
-        call_function("st_containsxy", col(polyCol),
-          col(lonCol).cast("double"), col(latCol).cast("double")))
-      .drop("__pcell", "__cell")
+    val (lon, lat) = (col(lonCol).cast("double"), col(latCol).cast("double"))
+    val (pts, polys, onCell) = CoverKeys.keyByCover(
+      points, call_function("st_cellid", lon, lat, lit(level)),
+      polygons, call_function("st_cellcover", col(polyCol), lit(level)))
+    pts.join(if (broadcastPolys) broadcast(polys) else polys,
+        onCell && call_function("st_containsxy", col(polyCol), lon, lat))
+      .drop(CoverKeys.columns: _*)
   }
 
   /** General geometry–geometry INTERSECTS join: both sides explode their
@@ -89,21 +82,12 @@ object SpatialJoins {
                      rightGeomCol: String, zoom: Int = 6,
                      broadcastRight: Boolean = true): DataFrame = {
     Geo.register(left.sparkSession)
-    val l = left
-      .withColumn("__lcover", call_function("st_tilecover",
-        col(leftGeomCol), lit(zoom)))
-      .withColumn("__jtile", explode(col("__lcover")))
-    val r0 = right
-      .withColumn("__rcover", call_function("st_tilecover",
-        col(rightGeomCol), lit(zoom)))
-      .withColumn("__rtile", explode(col("__rcover")))
-    val r = if (broadcastRight) broadcast(r0) else r0
-    l.join(r, col("__jtile") === col("__rtile") &&
-        col("__jtile") === call_function("st_minsharedtile",
-          col("__lcover"), col("__rcover")) &&
-        call_function("st_intersects",
-          col(leftGeomCol), col(rightGeomCol)))
-      .drop("__lcover", "__jtile", "__rcover", "__rtile")
+    val (l, r, onTile) = CoverKeys.keyByCovers(
+      left, call_function("st_tilecover", col(leftGeomCol), lit(zoom)),
+      right, call_function("st_tilecover", col(rightGeomCol), lit(zoom)))
+    l.join(if (broadcastRight) broadcast(r) else r, onTile &&
+        call_function("st_intersects", col(leftGeomCol), col(rightGeomCol)))
+      .drop(CoverKeys.columns: _*)
   }
 
   /** Trajectory/shape SIMILARITY join: all (left, right) pairs whose
@@ -137,22 +121,16 @@ object SpatialJoins {
     }
     // the barriers keep an upstream geometry construction (tracks,
     // buffers) out of the emptiness filters
-    val l = Barrier(left)
-      .where(!call_function("st_isempty", col(leftGeomCol)))
-      .withColumn("__lcover", coverExpanded(col(leftGeomCol), maxDist))
-      .withColumn("__jtile", explode(col("__lcover")))
-    val r0 = Barrier(right)
-      .where(!call_function("st_isempty", col(rightGeomCol)))
-      .withColumn("__rcover", coverExpanded(col(rightGeomCol), 0.0))
-      .withColumn("__rtile", explode(col("__rcover")))
-    val r = if (broadcastRight) broadcast(r0) else r0
-    l.join(r, col("__jtile") === col("__rtile") &&
-        col("__jtile") === call_function("st_minsharedtile",
-          col("__lcover"), col("__rcover")))
+    val (l, r, onTile) = CoverKeys.keyByCovers(
+      Barrier(left).where(!call_function("st_isempty", col(leftGeomCol))),
+      coverExpanded(col(leftGeomCol), maxDist),
+      Barrier(right).where(!call_function("st_isempty", col(rightGeomCol))),
+      coverExpanded(col(rightGeomCol), 0.0))
+    l.join(if (broadcastRight) broadcast(r) else r, onTile)
       .withColumn("hausdorff",
         call_function("st_hausdorff", col(leftGeomCol), col(rightGeomCol)))
       .filter(col("hausdorff") <= lit(maxDist))
-      .drop("__lcover", "__jtile", "__rcover", "__rtile")
+      .drop(CoverKeys.columns: _*)
   }
 
   /** Raster z/x/y tile assignment: one row per point with its tile id and
@@ -183,20 +161,19 @@ object SpatialJoins {
                          latCol: String = "lat"): DataFrame = {
     require(radius > 0, "radius must be positive")
     Geo.register(points.sparkSession)
-    val pts = points.withColumn("__cell", call_function("st_gridcell",
-      col(lonCol).cast("double"), col(latCol).cast("double"), lit(radius)))
-    val cand = queries
-      .select(col("qid"), col("qlon").cast("double").as("qlon"),
-        col("qlat").cast("double").as("qlat"))
-      .withColumn("__ccell", explode(call_function("st_gridring",
-        call_function("st_gridcell", col("qlon"), col("qlat"), lit(radius)),
-        lit(1))))
-    pts.join(cand, col("__cell") === col("__ccell"))
+    val (lon, lat) = (col(lonCol).cast("double"), col(latCol).cast("double"))
+    val (pts, cand, onCell) = CoverKeys.keyByCover(
+      points, call_function("st_gridcell", lon, lat, lit(radius)),
+      queries.select(col("qid"), col("qlon").cast("double").as("qlon"),
+        col("qlat").cast("double").as("qlat")),
+      call_function("st_gridring",
+        call_function("st_gridcell", col("qlon"), col("qlat"), lit(radius)), lit(1)))
+    pts.join(cand, onCell)
       .withColumn("dist2",
         (col(lonCol) - col("qlon")) * (col(lonCol) - col("qlon")) +
           (col(latCol) - col("qlat")) * (col(latCol) - col("qlat")))
       .filter(col("dist2") <= lit(radius * radius))
-      .drop("__cell", "__ccell", "qlon", "qlat")
+      .drop(CoverKeys.columns :+ "qlon" :+ "qlat": _*)
   }
 
   private def minCellEdgeMeters(level: Int): Double =
@@ -222,19 +199,18 @@ object SpatialJoins {
     Geo.register(points.sparkSession)
     var level = 20
     while (level > 0 && minCellEdgeMeters(level) < radiusMeters) level -= 1
-    val pts = points.withColumn("__cell", call_function("st_cellid",
-      col(lonCol).cast("double"), col(latCol).cast("double"), lit(level)))
-    val cand = queries
-      .select(col("qid"), col("qlon").cast("double").as("qlon"),
-        col("qlat").cast("double").as("qlat"))
-      .withColumn("__ccell", explode(call_function("st_cellcapcover",
-        col("qlon"), col("qlat"), lit(radiusMeters), lit(level))))
-    pts.join(cand, col("__cell") === col("__ccell"))
-      .withColumn("dist_m", call_function("st_distancesphere",
-        col(lonCol).cast("double"), col(latCol).cast("double"),
-        col("qlon"), col("qlat")))
+    val (lon, lat) = (col(lonCol).cast("double"), col(latCol).cast("double"))
+    val (pts, cand, onCell) = CoverKeys.keyByCover(
+      points, call_function("st_cellid", lon, lat, lit(level)),
+      queries.select(col("qid"), col("qlon").cast("double").as("qlon"),
+        col("qlat").cast("double").as("qlat")),
+      call_function("st_cellcapcover", col("qlon"), col("qlat"),
+        lit(radiusMeters), lit(level)))
+    pts.join(cand, onCell)
+      .withColumn("dist_m",
+        call_function("st_distancesphere", lon, lat, col("qlon"), col("qlat")))
       .filter(col("dist_m") <= lit(radiusMeters))
-      .drop("__cell", "__ccell", "qlon", "qlat")
+      .drop(CoverKeys.columns :+ "qlon" :+ "qlat": _*)
   }
 
   /** Salted repartition for hot keys: spreads each key over `salt` shuffle

@@ -1,5 +1,11 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,7 +13,7 @@ import graft.sql.GeoOps
 
 /** DBSCAN vs an independent single-node reference (BFS over the literal
   * definition), plus determinism and structure tests. */
-class ClusterSpec extends AnyFunSuite {
+class ClusterSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = graft.sql.SparkTestSession.spark
   import spark.implicits._
 
@@ -127,5 +133,36 @@ class ClusterSpec extends AnyFunSuite {
     val got = run(a ++ b ++ mid, eps = 1.0, minPts = 4)
     assert(got(9L) === ("border", Some(0L)))
     assert(got(0L) === ("core", Some(0L)) && got(5L) === ("core", Some(5L)))
+  }
+
+  test("pair join: one ring explode, the cell side broadcast only when it fits") {
+    val pts = seededPoints(300, 20.0)
+    val want = referenceDbscan(pts, 0.9, 3)
+    // dbscan's result and the executed plan of its cached (ida, idb)
+    // pairs; each call partitions differently, so no cache is shared
+    def pairsPlan(parts: Int): SparkPlan = {
+      val out = Cluster.dbscan(spark.createDataFrame(pts).toDF("id", "lon", "lat")
+        .repartition(parts), "id", "lon", "lat", 0.9, 3)
+      val got = out.collect().map(r => r.getLong(0) ->
+        (r.getString(1), if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
+      assert(got === want)
+      out.queryExecution.optimizedPlan.collectFirst {
+        case r: InMemoryRelation if r.output.map(_.name) == Seq("ida", "idb") =>
+          r.cachedPlan
+      }.get
+    }
+    def generates(p: SparkPlan) = collect(p) { case g: GenerateExec => g }
+    def check(p: SparkPlan): Seq[BroadcastHashJoinExec] = {
+      assert(generates(p).size == 1, p)
+      assert(collect(p) { case j: BroadcastNestedLoopJoinExec => j
+        case j: CartesianProductExec => j }.isEmpty, p)
+      collect(p) { case j: BroadcastHashJoinExec => j }
+    }
+    // 300 rows of (idb, blon, blat, __key) estimate at 12,000 B
+    val Seq(bhj) = check(pairsPlan(5))
+    assert(bhj.buildSide == BuildRight && generates(bhj.right).isEmpty, bhj)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+    try assert(check(pairsPlan(6)).isEmpty)
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 }

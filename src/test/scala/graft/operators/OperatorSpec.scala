@@ -271,13 +271,24 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("pipJoinCells agrees with pipJoin") {
-    val pts = randPoints(2000, 11L).toDF("pid", "lon", "lat")
+    val raw = randPoints(2000, 11L)
+    val pts = raw.toDF("pid", "lon", "lat")
     val polys = ImagesTable.polygonLayer(spark)
     val a = SpatialJoins.pipJoin(pts, polys, "poly", "lon", "lat", zoom = 6)
       .select("pid", "poly_id").as[(Long, Long)].collect().toSet
     val b = SpatialJoins.pipJoinCells(pts, polys, "poly", "lon", "lat", level = 7)
       .select("pid", "poly_id").as[(Long, Long)].collect().toSet
     assert(a == b)
+    // both go through one builder, so check them against brute force too
+    val geoms = polys.select("poly_id", "wkt").as[(Long, String)].collect()
+      .map { case (id, w) => (id, Wkt.parse(w)) }
+    val expected = (for {
+      (pid, lon, lat) <- raw
+      (id, g) <- geoms
+      if Pip.containsPoint(g, lon, lat)
+    } yield (pid, id)).toSet
+    assert(expected.nonEmpty)
+    assert(b == expected)
   }
 
   test("ring-expansion kNN matches brute force") {

@@ -194,6 +194,30 @@ class SpatialJoinRewriteSpec extends AnyFunSuite {
     }
   }
 
+  test("every SpatialJoins operator is keyed once, by its CoverKeys shape") {
+    Geo.register(spark)
+    val pts = lonLat(500, 77L)
+    val polys = ImagesTable.polygonLayer(spark)
+    val queries = lonLat(20, 78L).toDF("qid", "qlon", "qlat")
+    val (a, b) = (boxes(60, 79L), boxes(40, 80L).toDF("bid2", "bg2"))
+    // key × cover explodes one side, cover × cover both
+    val ops = Seq(
+      ("pipJoin", 1, SpatialJoins.pipJoin(pts, polys, "poly", "lon", "lat")),
+      ("pipJoinCells", 1, SpatialJoins.pipJoinCells(pts, polys, "poly", "lon", "lat")),
+      ("withinDistanceJoin", 1, SpatialJoins.withinDistanceJoin(pts, queries, 5.0)),
+      ("withinDistanceMetersJoin", 1,
+        SpatialJoins.withinDistanceMetersJoin(pts, queries, 500000.0)),
+      ("intersectsJoin", 2, SpatialJoins.intersectsJoin(a, b, "bg", "bg2")),
+      ("hausdorffJoin", 2, SpatialJoins.hausdorffJoin(a, b, "bg", "bg2", 3.0)))
+    ops.foreach { case (name, explodes, df) =>
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert(generates(df).size == explodes, s"$name:\n$plan")
+      assert(!df.queryExecution.executedPlan.toString.contains("NestedLoopJoin"),
+        s"$name:\n${df.queryExecution.executedPlan}")
+      df.count()
+    }
+  }
+
   test("a join on st_containsxy AND st_intersects is keyed once, on the contains tile") {
     Geo.register(spark)
     val pts = lonLat(500, 41L)
@@ -203,9 +227,12 @@ class SpatialJoinRewriteSpec extends AnyFunSuite {
       call_function("st_containsxy", col("poly"), col("lon"), col("lat")) &&
         call_function("st_intersects", col("poly"), col("pt")))
     val plan = both.queryExecution.optimizedPlan.toString
-    assert(generates(both).size == 1, plan)
-    assert(plan.contains("__pt_tile") && plan.contains("__poly_tile"), plan)
-    assert(!plan.contains("__ltile") && !plan.contains("__rtile"), plan)
+    // keyed by the contains case: its one explode is the polygons'
+    // zoom-7 tile cover, and no intersects claim was added
+    val Seq(gen) = generates(both)
+    assert(gen.generator.toString.contains("tileCover(poly"), plan)
+    assert(gen.generator.toString.contains(", 7)"), plan)
+    assert(!plan.contains("minSharedTile"), plan)
 
     // brute force: every pair, both predicates evaluated as columns (a
     // join with no condition is never rewritten)

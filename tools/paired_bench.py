@@ -52,19 +52,27 @@ def extract(sha, dest):
     os.rename(tmp, dest)
 
 
-def run(tree, command, workload, seed, seconds):
+def run(tree, side, command, workload, seed, seconds):
     """One benchmark run in tree; its metrics {name: value}, or None when it
-    printed no result line."""
+    printed no result line. A run without one is reported on stderr with its
+    exit code or signal and the tail of its stderr."""
     cmd = command + ["--workload", workload, "--seed", str(seed),
                      "--seconds", str(seconds)]
-    out = subprocess.run(cmd, cwd=tree, capture_output=True, text=True).stdout
-    for line in reversed(out.splitlines()):
+    proc = subprocess.run(cmd, cwd=tree, capture_output=True, text=True)
+    for line in reversed(proc.stdout.splitlines()):
         if line.startswith("{"):
             try:
                 metrics = json.loads(line)["metrics"]
             except (ValueError, KeyError):
-                return None
+                break
             return {k: v["value"] for k, v in metrics.items()}
+    code = proc.returncode
+    ended = f"signal {-code}" if code < 0 else f"exit code {code}"
+    tail = proc.stderr.splitlines()[-20:]
+    print(f"{workload} seed {seed}: {side} printed no result line ({ended}); "
+          f"last {len(tail)} stderr lines:", file=sys.stderr)
+    for line in tail:
+        print(f"  | {line}", file=sys.stderr)
     return None
 
 
@@ -122,13 +130,9 @@ def main():
         runs = {parent: [], change: []}
         for seed in range(1, a.seeds + 1):
             order = [parent, change] if seed % 2 else [change, parent]
-            got = {t: run(t, bench["command"], w, seed, bench["run_seconds"])
-                   for t in order}
-            for t in order:
-                if got[t] is None:
-                    missing += 1
-                    print(f"{w} seed {seed}: {side(t)} printed no result line",
-                          file=sys.stderr)
+            got = {t: run(t, side(t), bench["command"], w, seed,
+                          bench["run_seconds"]) for t in order}
+            missing += sum(1 for t in order if got[t] is None)
             if all(got.values()):
                 for t in order:
                     runs[t].append(got[t])
