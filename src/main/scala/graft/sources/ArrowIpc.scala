@@ -609,13 +609,6 @@ object ArrowIpc {
 
   // -------------------------------------------- geoarrow extension layer
 
-  private def extMetaJson(dims: String, crs: Option[String]): String = {
-    val crsJson = crs.map(c =>
-      if (c.trim.startsWith("{")) c
-      else "\"" + GeoSchema.jsonEscape(c) + "\"").getOrElse("null")
-    s"""{"crs":$crsJson,"dims":"${dims.toLowerCase}"}"""
-  }
-
   /** Writes a geometry DataFrame as GeoArrow-tagged IPC: the geometry
     * column converts to the native nested layout (`st_tonative`) and its
     * Arrow field carries `ARROW:extension:name = geoarrow.<type>` plus the
@@ -631,13 +624,14 @@ object ArrowIpc {
       col(geomCol), lit(geometryType), lit(dims), lit(coordType)))
     val meta = Map(geomCol -> Map(
       "ARROW:extension:name" -> s"geoarrow.${geometryType.toLowerCase}",
-      "ARROW:extension:metadata" -> extMetaJson(dims, crs)))
+      "ARROW:extension:metadata" ->
+        s"""{"crs":${GeoSchema.crsJson(crs)},"dims":"${dims.toLowerCase}"}"""))
     write(nat, path, meta, batchRows, stream)
   }
 
   /** Reads GeoArrow-tagged IPC: every `geoarrow.*`-tagged column decodes
     * from its native layout back to the engine geometry struct, with crs
-    * re-attached as column metadata (C1/C2 propagation). */
+    * and edges re-attached as column metadata (C1/C2 propagation). */
   def readGeo(spark: SparkSession, path: String,
               requireSuccess: Boolean = true): DataFrame = {
     Geo.register(spark)
@@ -652,8 +646,10 @@ object ArrowIpc {
       meta.get("ARROW:extension:name")
         .filter(_.startsWith("geoarrow.")).foreach { extName =>
           val gt = extName.stripPrefix("geoarrow.")
-          val extJson = meta.getOrElse("ARROW:extension:metadata", "{}")
-          val crs = GeoParquet.extractCrs(extJson)
+          // the spec allows empty extension metadata for "no crs, planar"
+          val ext = GeoSchema.jsonMembers(meta.get("ARROW:extension:metadata")
+            .filter(_.trim.nonEmpty).getOrElse("{}"))
+          val (crs, edges) = GeoSchema.crsAndEdges(ext)
           // coord layout from the Spark type: struct leaves = separate,
           // double-list leaves = interleaved (dims then from metadata)
           def innermost(dt: DataType): DataType = dt match {
@@ -663,16 +659,12 @@ object ArrowIpc {
           val inner = innermost(df.schema(name).dataType)
           val (coordType, dims) = inner match {
             case s: StructType => ("separate", s.fields.map(_.name).mkString)
-            case _ => ("interleaved",
-              GeoParquet.extractString(extJson, "dims").getOrElse("xy"))
+            case _ => ("interleaved", ext.get("dims").flatten.getOrElse("xy"))
           }
           df = df.withColumn(name, call_function("st_fromnative",
             col(name), lit(gt), lit(dims), lit(coordType)))
-          val typeInt = Seq("point", "linestring", "polygon", "multipoint",
-            "multilinestring", "multipolygon").indexOf(gt) + 1
-          val dimsInt = Seq("xy", "xyz", "xym", "xyzm").indexOf(dims) + 1
-          if (typeInt > 0 && dimsInt > 0)
-            df = GeoSchema.withGeoMetadata(df, name, typeInt, dimsInt, crs)
+          for (t <- GeoSchema.geometryTypeId(gt); d <- GeoSchema.dimsId(dims))
+            df = GeoSchema.withGeoMetadata(df, name, t, d, crs, edges)
         }
     }
     df

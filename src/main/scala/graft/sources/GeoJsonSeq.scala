@@ -6,12 +6,11 @@ import org.apache.spark.sql.functions._
 import graft.sql.Geo
 
 /** GeoJSONSeq (newline-delimited GeoJSON, RFC 8142-style) source/sink —
-  * the SCALABLE GeoJSON variant: one Feature per line means the text
-  * source splits files at arbitrary byte offsets and every line parses
-  * independently inside whole-stage codegen, so a 100-TB feature dump
-  * reads like any other splittable format (a single whole-file
-  * `FeatureCollection`, by contrast, is unsplittable by construction —
-  * GDAL's GeoJSONSeq driver exists for exactly this reason).
+  * the SCALABLE GeoJSON variant: one Feature per line means a file splits
+  * at arbitrary byte offsets and every line parses independently, so a
+  * 100-TB feature dump reads like any other splittable format (a single
+  * whole-file `FeatureCollection`, by contrast, is unsplittable by
+  * construction — GDAL's GeoJSONSeq driver exists for exactly this reason).
   *
   * Properties ride as the RAW JSON substring (schema-free — feature
   * attributes vary row to row in the wild); pull typed fields out with
@@ -19,19 +18,14 @@ import graft.sql.Geo
 object GeoJsonSeq {
 
   /** Reads `path` (text files of one Feature — or bare geometry — per
-    * line) into (geomCol, properties, feature_id). `strict = false` skips
-    * unparseable lines (dirty lakes) instead of failing the scan. */
+    * line) into (geomCol, properties, feature_id) through the `geojsonseq`
+    * DataSourceV2 scan. `strict = false` skips unparseable lines (dirty
+    * lakes) instead of failing the scan. */
   def read(spark: SparkSession, path: String, geomCol: String = "geom",
            strict: Boolean = true): DataFrame = {
     Geo.register(spark)
-    val fn = if (strict) "st_geojson_feature" else "st_trygeojson_feature"
-    val parsed = spark.read.textFile(path).toDF("value")
-      .filter(length(trim(col("value"))) > 0)
-      .select(call_function(fn, col("value")).as("__f"))
-    (if (strict) parsed else parsed.filter(col("__f").isNotNull))
-      .select(col("__f")("geometry").as(geomCol),
-        col("__f")("properties").as("properties"),
-        col("__f")("id").as("feature_id"))
+    spark.read.format("geojsonseq").option("strict", strict).load(path)
+      .withColumnRenamed("geom", geomCol)
   }
 
   /** Writes features as GeoJSONSeq: geometry serialized via

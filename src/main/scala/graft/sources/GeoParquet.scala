@@ -30,33 +30,29 @@ object GeoParquet {
     Geo.register(spark)
     val wkbDf = df.withColumn(geomCol, call_function("st_aswkb", col(geomCol)))
     wkbDf.write.mode("overwrite").parquet(path)
-    // file-level bbox from the box aggregate (kernel K8)
+    // file-level bbox from the box aggregate (kernel K8); an empty or
+    // all-EMPTY frame has an infinite box, which JSON cannot hold — bbox is
+    // optional, so it is left out
     val box = df.agg(call_function("st_box_agg", col(geomCol))).collect()(0)
       .getStruct(0)
-    val bbox = s"[${box.getDouble(0)},${box.getDouble(1)},${box.getDouble(2)},${box.getDouble(3)}]"
-    val crsJson = crs.map(c =>
-      if (c.trim.startsWith("{")) c
-      else "\"" + GeoSchema.jsonEscape(c) + "\"").getOrElse("null")
-    val colJson = GeoSchema.jsonEscape(geomCol)
-    val meta =
-      s"""{"version":"1.1.0","primary_column":"$colJson","columns":{"$colJson":
-         |{"encoding":"WKB","geometry_types":[],"crs":$crsJson,"bbox":$bbox}}}"""
-        .stripMargin.replace("\n", "")
-    stampGeoFooters(path, meta)
-    Files.writeString(Paths.get(path, "_geo_metadata.json"), meta)
+    val bbox = (0 until 4).map(box.getDouble)
+    val bboxJson =
+      if (bbox.forall(_.isFinite)) bbox.mkString(""","bbox":[""", ",", "]") else ""
+    stampGeo(path, geomCol,
+      s""""encoding":"WKB","geometry_types":[],"crs":${GeoSchema.crsJson(crs)}$bboxJson""")
   }
 
   def read(spark: SparkSession, path: String, geomCol: String): DataFrame = {
     Geo.register(spark)
     val df = spark.read.parquet(path)
       .withColumn(geomCol, call_function("st_geomfromwkb", col(geomCol)))
-    geoMetadataJson(path) match {
-      case Some(json) =>
-        val crs = extractCrs(json)
+    geoColumn(path, geomCol) match {
+      case Some(column) =>
+        val (crs, edges) = crsAndEdges(column)
         val inferred = GeoSchema.inferGeoType(df, geomCol)
         if (!inferred.isWkbFallback)
           GeoSchema.withGeoMetadata(df, geomCol, inferred.geometryType,
-            inferred.dims, crs)
+            inferred.dims, crs, edges)
         else df
       case None => df
     }
@@ -95,19 +91,11 @@ object GeoParquet {
       .drop("__sort")
       .write.mode("overwrite").parquet(path)
     keyed.unpersist(blocking = false)
-    val crsJson = crs.map(c =>
-      if (c.trim.startsWith("{")) c
-      else "\"" + GeoSchema.jsonEscape(c) + "\"").getOrElse("null")
-    val colJson = GeoSchema.jsonEscape(geomCol)
-    val bJson = GeoSchema.jsonEscape(bboxCol)
-    val meta =
-      s"""{"version":"1.1.0","primary_column":"$colJson","columns":{"$colJson":
-         |{"encoding":"WKB","geometry_types":[],"crs":$crsJson,
-         |"covering":{"bbox":{"xmin":["$bJson","xmin"],"ymin":["$bJson","ymin"],
-         |"xmax":["$bJson","xmax"],"ymax":["$bJson","ymax"]}}}}}"""
-        .stripMargin.replace("\n", "")
-    stampGeoFooters(path, meta)
-    Files.writeString(Paths.get(path, "_geo_metadata.json"), meta)
+    val b = GeoSchema.jsonEscape(bboxCol)
+    stampGeo(path, geomCol,
+      s""""encoding":"WKB","geometry_types":[],"crs":${GeoSchema.crsJson(crs)},""" +
+        s""""covering":{"bbox":{"xmin":["$b","xmin"],"ymin":["$b","ymin"],""" +
+        s""""xmax":["$b","xmax"],"ymax":["$b","ymax"]}}""")
   }
 
   /** Box query over a covering-column table: the bbox-intersection
@@ -144,11 +132,33 @@ object GeoParquet {
     }.toOption.flatten)
   }
 
-  /** Adds the `geo` footer entry to every data file of a just-written
-    * table. Driver-side, but O(files) footer-tail IO only — the same cost
-    * class as the write's own commit protocol. */
-  def stampGeoFooters(path: String, geoJson: String): Unit =
-    dataFiles(path).foreach(setFooterKeyValue(_, "geo", geoJson))
+  /** The `columns.<geomCol>` members of the table's GeoParquet metadata;
+    * None when the table has no metadata or does not list the column. */
+  private def geoColumn(path: String, geomCol: String): Option[Map[String, Option[String]]] =
+    geoMetadataJson(path).flatMap { json =>
+      GeoSchema.jsonMembers(json).get("columns").flatten
+        .flatMap(GeoSchema.jsonMembers(_).get(geomCol).flatten)
+        .map(GeoSchema.jsonMembers)
+    }
+
+  /** A GeoParquet column's (crs, edges): a column with no `crs` key is
+    * OGC:CRS84 and `"crs": null` is unknown (GeoParquet 1.1). */
+  private def crsAndEdges(column: Map[String, Option[String]]): (Option[String], String) = {
+    val (crs, edges) = GeoSchema.crsAndEdges(column)
+    (if (column.contains("crs")) crs else Some(GeoSchema.Crs84Projjson), edges)
+  }
+
+  /** Writes a just-written table's GeoParquet metadata, with
+    * `columnMembers` as the one column's JSON members, into the `geo` footer
+    * entry of every data file and then the sidecar. Driver-side, but
+    * O(files) footer-tail IO only — the same cost class as the write's own
+    * commit protocol. */
+  private def stampGeo(path: String, geomCol: String, columnMembers: String): Unit = {
+    val c = GeoSchema.jsonEscape(geomCol)
+    val meta = s"""{"version":"1.1.0","primary_column":"$c","columns":{"$c":{$columnMembers}}}"""
+    dataFiles(path).foreach(setFooterKeyValue(_, "geo", meta))
+    Files.writeString(Paths.get(path, "_geo_metadata.json"), meta)
+  }
 
   private def dataFiles(path: String): Seq[Path] = {
     import scala.jdk.CollectionConverters._
@@ -253,17 +263,9 @@ object GeoParquet {
     df.withColumn(geomCol, call_function("st_tonative", col(geomCol),
         lit(geometryType), lit(dims), lit(coordType)))
       .write.mode("overwrite").parquet(path)
-    val crsJson = crs.map(c =>
-      if (c.trim.startsWith("{")) c
-      else "\"" + GeoSchema.jsonEscape(c) + "\"").getOrElse("null")
-    val colJson = GeoSchema.jsonEscape(geomCol)
-    val meta =
-      s"""{"version":"1.1.0","primary_column":"$colJson","columns":{"$colJson":
-         |{"encoding":"geoarrow.${geometryType.toLowerCase}","dims":"${dims.toLowerCase}",
-         |"coord_type":"${coordType.toLowerCase}","crs":$crsJson}}}"""
-        .stripMargin.replace("\n", "")
-    stampGeoFooters(path, meta)
-    Files.writeString(Paths.get(path, "_geo_metadata.json"), meta)
+    stampGeo(path, geomCol,
+      s""""encoding":"geoarrow.${geometryType.toLowerCase}","dims":"${dims.toLowerCase}",""" +
+        s""""coord_type":"${coordType.toLowerCase}","crs":${GeoSchema.crsJson(crs)}""")
   }
 
   /** Reads a native-layout GeoParquet table written by [[writeNative]] (or
@@ -272,69 +274,20 @@ object GeoParquet {
     * crs metadata. */
   def readNative(spark: SparkSession, path: String, geomCol: String): DataFrame = {
     Geo.register(spark)
-    val json = geoMetadataJson(path).getOrElse(
-      throw new IllegalArgumentException(s"no geo metadata (footer or sidecar) at $path"))
-    val enc = extractString(json, "encoding").getOrElse(
-      throw new IllegalArgumentException(s"no geoarrow encoding in sidecar at $path"))
+    val column = geoColumn(path, geomCol).getOrElse(throw new IllegalArgumentException(
+      s"no geo metadata (footer or sidecar) for column $geomCol at $path"))
+    def member(key: String) = column.get(key).flatten
+    val enc = member("encoding").getOrElse(
+      throw new IllegalArgumentException(s"no geoarrow encoding for column $geomCol at $path"))
     require(enc.startsWith("geoarrow."), s"not a native geoarrow encoding: $enc")
     val gt = enc.stripPrefix("geoarrow.")
-    val dims = extractString(json, "dims").getOrElse("xy")
-    val ct = extractString(json, "coord_type").getOrElse("separate")
-    val crs = extractCrs(json)
+    val dims = member("dims").getOrElse("xy")
+    val ct = member("coord_type").getOrElse("separate")
+    val (crs, edges) = crsAndEdges(column)
     val df = spark.read.parquet(path)
       .withColumn(geomCol, call_function("st_fromnative", col(geomCol),
         lit(gt), lit(dims), lit(ct)))
-    val typeInt = Seq("point", "linestring", "polygon", "multipoint",
-      "multilinestring", "multipolygon").indexOf(gt) + 1
-    val dimsInt = Seq("xy", "xyz", "xym", "xyzm").indexOf(dims) + 1
-    if (typeInt > 0 && dimsInt > 0)
-      GeoSchema.withGeoMetadata(df, geomCol, typeInt, dimsInt, crs)
-    else df
-  }
-
-  private[sources] def extractString(json: String, key: String): Option[String] = {
-    val k = "\"" + key + "\":"
-    val i = json.indexOf(k)
-    if (i < 0) return None
-    val rest = json.substring(i + k.length).trim
-    if (!rest.startsWith("\"")) return None
-    var j = 1
-    while (j < rest.length && rest.charAt(j) != '"') {
-      if (rest.charAt(j) == '\\') j += 1
-      j += 1
-    }
-    if (j < rest.length) Some(GeoSchema.jsonUnescape(rest.substring(1, j))) else None
-  }
-
-  private[sources] def extractCrs(json: String): Option[String] = {
-    val key = "\"crs\":"
-    val i = json.indexOf(key)
-    if (i < 0) return None
-    val rest = json.substring(i + key.length).trim
-    if (rest.startsWith("null")) None
-    else if (rest.startsWith("{")) {
-      // balanced-brace slice
-      var depth = 0; var j = 0; var inStr = false
-      while (j < rest.length) {
-        val c = rest.charAt(j)
-        if (inStr) { if (c == '\\') j += 1 else if (c == '"') inStr = false }
-        else {
-          if (c == '"') inStr = true
-          else if (c == '{') depth += 1
-          else if (c == '}') { depth -= 1; if (depth == 0) return Some(rest.substring(0, j + 1)) }
-        }
-        j += 1
-      }
-      None
-    } else if (rest.startsWith("\"")) {
-      // scan to the closing quote honoring escapes, then unescape the body
-      var j = 1
-      while (j < rest.length && rest.charAt(j) != '"') {
-        if (rest.charAt(j) == '\\') j += 1
-        j += 1
-      }
-      if (j < rest.length) Some(GeoSchema.jsonUnescape(rest.substring(1, j)))
-      else None
-    } else None
+    (for (t <- GeoSchema.geometryTypeId(gt); d <- GeoSchema.dimsId(dims))
+      yield GeoSchema.withGeoMetadata(df, geomCol, t, d, crs, edges)).getOrElse(df)
   }
 }

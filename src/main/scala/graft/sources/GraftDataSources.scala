@@ -168,7 +168,7 @@ private[sources] class ArrowIpcReaderFactory(schema: StructType,
 }
 
 /** GeoJSONSeq DataSourceV2 — `spark.read.format("geojsonseq").load(dir)`,
-  * the SQL-surface twin of [[GeoJsonSeq.read]]. Line-delimited text is
+  * which [[GeoJsonSeq.read]] also runs. Line-delimited text is
   * splittable at ARBITRARY byte offsets, so partitions are planned at
   * `maxSplitBytes` boundaries within each file (Hadoop `LineRecordReader`
   * owns the straddling-line protocol: a split starting past 0 skips its

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-import graft.core.{DoubleFormat, GeomTypes}
+import graft.core.DoubleFormat
 
 /** Function registry for the engine: every kernel from SURVEY.md §2A/§2C
   * exposed as a SQL function (and therefore to the DataFrame API via
@@ -67,19 +67,12 @@ object Geo {
     * layout cast functions; coord_type defaults to 'separate' (the
     * reference's default layout, `/root/reference/R/type.R:420-424`). */
   private def nativeTarget(a: Seq[Expression]): (Int, Int, Int) = {
-    val gt = litStr(a(1), "geometry type") match {
-      case "point" => GeomTypes.Point
-      case "linestring" => GeomTypes.LineString
-      case "polygon" => GeomTypes.Polygon
-      case "multipoint" => GeomTypes.MultiPoint
-      case "multilinestring" => GeomTypes.MultiLineString
-      case "multipolygon" => GeomTypes.MultiPolygon
-      case other => throw new IllegalArgumentException(s"unknown geometry type '$other'")
+    def named(i: Int, what: String, id: String => Option[Int]): Int = {
+      val name = litStr(a(i), what)
+      id(name).getOrElse(throw new IllegalArgumentException(s"unknown $what '$name'"))
     }
-    val dims = if (a.size > 2) litStr(a(2), "dims") match {
-      case "xy" => 1; case "xyz" => 2; case "xym" => 3; case "xyzm" => 4
-      case other => throw new IllegalArgumentException(s"unknown dims '$other'")
-    } else 1
+    val gt = named(1, "geometry type", GeoSchema.geometryTypeId)
+    val dims = if (a.size > 2) named(2, "dims", GeoSchema.dimsId) else 1
     val ct = if (a.size > 3) litStr(a(3), "coord type") match {
       case "separate" => GeoSchema.CoordType.Separate
       case "interleaved" => GeoSchema.CoordType.Interleaved

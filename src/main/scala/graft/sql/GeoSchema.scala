@@ -1,5 +1,7 @@
 package graft.sql
 
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonProcessingException, JsonToken}
+import com.fasterxml.jackson.core.json.JsonReadFeature
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{Metadata, MetadataBuilder, StructField}
@@ -48,16 +50,21 @@ object GeoSchema {
                    coordType: Int = CoordType.Interleaved): Int =
     dims * 1000 + geometryType + (if (coordType == CoordType.Interleaved) 10000 else 0)
 
-  def extensionName(geometryType: Int): String = geometryType match {
-    case 1 => "geoarrow.point"
-    case 2 => "geoarrow.linestring"
-    case 3 => "geoarrow.polygon"
-    case 4 => "geoarrow.multipoint"
-    case 5 => "geoarrow.multilinestring"
-    case 6 => "geoarrow.multipolygon"
-    case 990 => "geoarrow.box"
-    case _ => "geoarrow.wkb"
-  }
+  /** GeoArrow geometry-type and dims names; each name's id is its index + 1
+    * (`/root/reference/R/type.R:403-418`). */
+  val GeometryTypeNames = Seq("point", "linestring", "polygon", "multipoint",
+    "multilinestring", "multipolygon")
+  val DimsNames = Seq("xy", "xyz", "xym", "xyzm")
+
+  def geometryTypeId(name: String): Option[Int] =
+    Some(GeometryTypeNames.indexOf(name.toLowerCase) + 1).filter(_ > 0)
+
+  def dimsId(name: String): Option[Int] =
+    Some(DimsNames.indexOf(name.toLowerCase) + 1).filter(_ > 0)
+
+  def extensionName(geometryType: Int): String =
+    if (geometryType == 990) "geoarrow.box"
+    else "geoarrow." + GeometryTypeNames.lift(geometryType - 1).getOrElse("wkb")
 
   /** OGC:CRS84 PROJJSON (public OGC/EPSG registry data; the reference ships
     * the same constant — `/root/reference/src/geoarrow.c:1234-1260`). */
@@ -83,115 +90,68 @@ object GeoSchema {
     sb.toString
   }
 
-  /** Inverse of [[jsonEscape]] for a JSON string body. */
-  def jsonUnescape(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        i += 1
-        s.charAt(i) match {
-          case 'n' => sb.append('\n'); case 't' => sb.append('\t')
-          case 'r' => sb.append('\r')
-          case 'u' if i + 4 < s.length =>
-            sb.append(Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar)
-            i += 4
-          case other => sb.append(other)
-        }
-      } else sb.append(c)
-      i += 1
-    }
-    sb.toString
+  /** The JSON value of a crs: PROJJSON (starts with '{') raw, any other crs
+    * as an escaped string, no crs as `null`. */
+  def crsJson(crs: Option[String]): String = crs match {
+    case Some(c) if c.trim.startsWith("{") => c.trim
+    case Some(c) => "\"" + jsonEscape(c) + "\""
+    case None => "null"
   }
 
-  /** `{"crs":...,"edges":"..."}` — crs embedded raw when PROJJSON (starts
-    * with '{'), quote-escaped string otherwise; edges omitted when planar. */
+  /** `{"crs":...,"edges":"..."}` — crs omitted when absent or empty, edges
+    * omitted when planar. */
   def serializeMetadata(crs: Option[String], edges: String = "planar"): String = {
     val parts = Seq.newBuilder[String]
-    crs.filter(_.nonEmpty).foreach { c =>
-      if (c.trim.startsWith("{")) parts += s""""crs":${c.trim}"""
-      else parts += s""""crs":"${jsonEscape(c)}""""
-    }
+    crs.filter(_.nonEmpty).foreach(c => parts += "\"crs\":" + crsJson(Some(c)))
     if (edges != "planar" && EdgeTypes.contains(edges))
       parts += s""""edges":"$edges""""
     parts.result().mkString("{", ",", "}")
   }
 
-  /** Minimal parser for the subset the reference writes (hand-rolled like
-    * `/root/reference/src/geoarrow.c:830-985`): returns (crs, edges). */
-  def parseMetadata(json: String): (Option[String], String) = {
-    var crs: Option[String] = None
-    var edges = "planar"
-    var i = 0
-    val s = json
-    def skipWs(): Unit = { while (i < s.length && s.charAt(i).isWhitespace) i += 1 }
-    def parseString(): String = {
-      require(s.charAt(i) == '"'); i += 1
-      val sb = new StringBuilder
-      while (i < s.length && s.charAt(i) != '"') {
-        if (s.charAt(i) == '\\' && i + 1 < s.length) {
-          i += 1
-          sb.append(s.charAt(i) match {
-            case 'n' => '\n'; case 't' => '\t'; case 'r' => '\r'
-            case c => c
-          })
-        } else sb.append(s.charAt(i))
-        i += 1
+  // NaN/Infinity number tokens are read (as text): Python's json module
+  // writes them for an empty frame's bbox, and so did this engine's
+  // GeoParquet writer before it learned to omit a non-finite bbox
+  private val jsonFactory = new JsonFactoryBuilder()
+    .enable(JsonReadFeature.ALLOW_NON_NUMERIC_NUMBERS).build()
+
+  /** The top-level members of a JSON object: string values decoded, object
+    * and array values as their raw source text (PROJJSON stays
+    * byte-for-byte), other scalars as their literal text, and `null` as
+    * `None` — distinct from a missing key. Malformed JSON raises
+    * `IllegalArgumentException`. */
+  def jsonMembers(json: String): Map[String, Option[String]] = {
+    def invalid(cause: Throwable = null) =
+      new IllegalArgumentException(s"invalid metadata JSON: $json", cause)
+    val p = jsonFactory.createParser(json)
+    try {
+      if (p.nextToken() != JsonToken.START_OBJECT) throw invalid()
+      val members = Map.newBuilder[String, Option[String]]
+      while (p.nextToken() == JsonToken.FIELD_NAME) {
+        val key = p.currentName()
+        members += key -> (p.nextToken() match {
+          case JsonToken.VALUE_NULL => None
+          case JsonToken.START_OBJECT | JsonToken.START_ARRAY =>
+            val start = p.currentTokenLocation().getCharOffset.toInt
+            p.skipChildren()
+            Some(json.substring(start,
+              p.currentTokenLocation().getCharOffset.toInt + 1))
+          case _ => Some(p.getText)
+        })
       }
-      i += 1
-      sb.toString
-    }
-    def parseValueRaw(): String = {
-      skipWs()
-      if (s.charAt(i) == '"') "\"" + parseString() + "\"" // re-wrapped below
-      else if (s.charAt(i) == '{' || s.charAt(i) == '[') {
-        val open = s.charAt(i)
-        val close = if (open == '{') '}' else ']'
-        var depth = 0
-        val start = i
-        var inStr = false
-        while (i < s.length) {
-          val c = s.charAt(i)
-          if (inStr) {
-            if (c == '\\') i += 1
-            else if (c == '"') inStr = false
-          } else {
-            if (c == '"') inStr = true
-            else if (c == open) depth += 1
-            else if (c == close) { depth -= 1; if (depth == 0) { i += 1; return s.substring(start, i) } }
-          }
-          i += 1
-        }
-        throw new IllegalArgumentException(s"invalid metadata JSON: $json")
-      } else {
-        val start = i
-        while (i < s.length && !",}".contains(s.charAt(i))) i += 1
-        s.substring(start, i).trim
-      }
-    }
-    skipWs()
-    if (i >= s.length || s.charAt(i) != '{')
-      throw new IllegalArgumentException(s"invalid metadata JSON: $json")
-    i += 1
-    skipWs()
-    while (i < s.length && s.charAt(i) != '}') {
-      val key = parseString()
-      skipWs()
-      require(s.charAt(i) == ':', s"invalid metadata JSON: $json"); i += 1
-      skipWs()
-      key match {
-        case "crs" =>
-          if (s.charAt(i) == '"') crs = Some(parseString())
-          else crs = Some(parseValueRaw())
-        case "edges" => edges = parseString()
-        case _ => parseValueRaw() // unknown keys skipped
-      }
-      skipWs()
-      if (i < s.length && s.charAt(i) == ',') { i += 1; skipWs() }
-    }
-    (crs, edges)
+      if (p.nextToken() != null) throw invalid() // content after the object
+      members.result()
+    } catch {
+      case e: JsonProcessingException => throw invalid(e)
+    } finally p.close()
   }
+
+  /** A metadata object's (crs, edges); edges default to planar. */
+  def crsAndEdges(members: Map[String, Option[String]]): (Option[String], String) =
+    (members.get("crs").flatten, members.get("edges").flatten.getOrElse("planar"))
+
+  /** (crs, edges) of a GeoArrow extension-metadata JSON. */
+  def parseMetadata(json: String): (Option[String], String) =
+    crsAndEdges(jsonMembers(json))
 
   def crsTypeOf(crs: Option[String]): Int = crs match {
     case None | Some("") => CrsType.None
@@ -262,22 +222,18 @@ object GeoSchema {
     }
   }
 
-  private val TypeNames = Map("point" -> 1, "linestring" -> 2, "polygon" -> 3,
-    "multipoint" -> 4, "multilinestring" -> 5, "multipolygon" -> 6)
-  private val DimNames = Map("xy" -> 1, "xyz" -> 2, "xym" -> 3, "xyzm" -> 4)
-
   /** `as_geoarrow`-style column cast with automatic crs/edges propagation. */
   def castType(df: DataFrame, colName: String, target: String): DataFrame = {
     Geo.register(df.sparkSession)
     transformGeo(df, colName,
-      newGeometryType = TypeNames.get(target.toLowerCase))(
+      newGeometryType = geometryTypeId(target))(
       c => call_function("st_casttype", c, lit(target)))
   }
 
   /** Dimension cast (NaN fill) with automatic crs/edges propagation. */
   def castDims(df: DataFrame, colName: String, dims: String): DataFrame = {
     Geo.register(df.sparkSession)
-    transformGeo(df, colName, newDims = DimNames.get(dims.toLowerCase))(
+    transformGeo(df, colName, newDims = dimsId(dims))(
       c => call_function("st_castdims", c, lit(dims)))
   }
 

@@ -178,4 +178,21 @@ class ArrowIpcSpec extends AnyFunSuite {
       .collect()(0).getString(0)
     assert(got == wkt)
   }
+
+  test("foreign extension metadata: empty string reads as {}, edges carried") {
+    Geo.register(spark)
+    val nat = spark.sql(
+      "SELECT st_tonative(st_point(1.0, 2.0), 'point', 'xy', 'separate') AS geom")
+    def readBack(extMeta: String) = {
+      val dir = tmp("extmeta")
+      ArrowIpc.write(nat, dir, Map("geom" -> Map(
+        "ARROW:extension:name" -> "geoarrow.point",
+        "ARROW:extension:metadata" -> extMeta)))
+      GeoSchema.parseField(ArrowIpc.readGeo(spark, dir).schema("geom"))
+    }
+    val empty = readBack("")
+    assert(empty.crs.isEmpty && empty.edges == "planar")
+    val spherical = readBack("""{"crs":"EPSG:4326","edges":"spherical"}""")
+    assert(spherical.crs.contains("EPSG:4326") && spherical.edges == "spherical")
+  }
 }

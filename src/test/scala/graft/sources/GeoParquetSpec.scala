@@ -2,11 +2,34 @@ package graft.sources
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.sql.{Geo, GeoSchema}
 
 class GeoParquetSpec extends AnyFunSuite {
   lazy val spark = graft.sql.SparkTestSession.spark
+
+  /** A one-file parquet table of `sql`'s rows whose footer carries `geo` as
+    * its GeoParquet metadata, the way a foreign writer leaves it (no
+    * sidecar). */
+  private def foreignTable(sql: String, geo: String): String = {
+    Geo.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("geoparquet_foreign").toString
+    spark.sql(sql).coalesce(1).write.mode("overwrite").parquet(dir)
+    val files = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try files.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach(GeoParquet.setFooterKeyValue(_, "geo", geo))
+    finally files.close()
+    dir
+  }
+
+  private def wkbTable(geo: String) = foreignTable(
+    "SELECT id, st_aswkb(st_point(CAST(id AS DOUBLE), 1.0)) AS geom FROM range(3)",
+    geo)
+
+  private def parsedGeom(df: org.apache.spark.sql.DataFrame) =
+    GeoSchema.parseField(df.schema("geom"))
 
   test("GeoParquet write/read round trip with metadata") {
     Geo.register(spark)
@@ -172,5 +195,82 @@ class GeoParquetSpec extends AnyFunSuite {
     val wktAfter = back.selectExpr("id", "st_aswkt(geom) AS w").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(wktAfter == wktBefore)
+  }
+
+  test("empty frames write valid metadata without a bbox and read back") {
+    Geo.register(spark)
+    for (sql <- Seq(
+      "SELECT id, st_point(CAST(id AS DOUBLE), 0.0) AS geom FROM range(0)",
+      "SELECT id, st_geomfromwkt('POINT EMPTY') AS geom FROM range(3)")) {
+      val dir = java.nio.file.Files.createTempDirectory("geoparquet_empty").toString
+      val df = spark.sql(sql)
+      GeoParquet.write(df, "geom", dir)
+      val sidecar = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(dir, "_geo_metadata.json"))
+      for (meta <- Seq(sidecar, GeoParquet.geoMetadataJson(dir).get)) {
+        assert(!meta.contains("Infinity") && !meta.contains("bbox"), meta)
+        // strict JSON: jackson-databind without non-numeric numbers
+        new com.fasterxml.jackson.databind.ObjectMapper().readTree(meta)
+      }
+      assert(GeoParquet.read(spark, dir, "geom").count() == df.count())
+    }
+    // a footer that already carries a non-finite bbox (older writers, and
+    // Python's json module) still reads
+    val legacy = wkbTable(
+      """{"version":"1.1.0","primary_column":"geom","columns":{"geom":{"encoding":"WKB","geometry_types":[],"crs":"EPSG:4326","bbox":[Infinity,Infinity,-Infinity,NaN]}}}""")
+    assert(parsedGeom(GeoParquet.read(spark, legacy, "geom")).crs.contains("EPSG:4326"))
+  }
+
+  test("footer crs: missing key is OGC:CRS84, null is unknown") {
+    val noKey = wkbTable(
+      """{"version":"1.1.0","primary_column":"geom","columns":{"geom":{"encoding":"WKB","geometry_types":[]}}}""")
+    assert(parsedGeom(GeoParquet.read(spark, noKey, "geom")).crs
+      .contains(GeoSchema.Crs84Projjson))
+    val nullCrs = wkbTable(
+      """{"version":"1.1.0","primary_column":"geom","columns":{"geom":{"encoding":"WKB","geometry_types":[],"crs":null}}}""")
+    val p = parsedGeom(GeoParquet.read(spark, nullCrs, "geom"))
+    assert(p.crs.isEmpty && p.crsType == GeoSchema.CrsType.None)
+  }
+
+  test("footer edges reach the field metadata; planar kernels refuse spherical") {
+    val dir = wkbTable(
+      """{"version":"1.1.0","primary_column":"geom","columns":{"geom":{"encoding":"WKB","geometry_types":[],"edges":"spherical"}}}""")
+    val back = GeoParquet.read(spark, dir, "geom")
+    assert(parsedGeom(back).edges == "spherical")
+    val err = intercept[Exception] {
+      back.select(call_function("st_envelope", col("geom"))).collect()
+    }
+    assert(err.getMessage.contains("non-planar"))
+  }
+
+  test("foreign footer crs with \\b, \\f and \\/ escapes reads back") {
+    val dir = wkbTable(
+      """{"version":"1.1.0","primary_column":"geom","columns":{"geom":{"encoding":"WKB","geometry_types":[],"crs":"a\bb\fc\/d"}}}""")
+    assert(parsedGeom(GeoParquet.read(spark, dir, "geom")).crs
+      .contains("a\bb\fc/d"))
+  }
+
+  test("two-column footer: read and readNative take the named column's metadata") {
+    val geo =
+      """{"version":"1.1.0","primary_column":"a","columns":{
+        |"a":{"encoding":"WKB","geometry_types":[],"dims":"xy","coord_type":"separate","crs":null},
+        |"b":{"encoding":"geoarrow.point","dims":"xyz","coord_type":"interleaved","crs":"EPSG:3857"}}}"""
+        .stripMargin
+    val wkb = foreignTable(
+      """SELECT st_aswkb(st_point(1.0, 2.0)) AS a,
+        |  st_aswkb(st_point(CAST(id AS DOUBLE), 3.0)) AS b FROM range(3)""".stripMargin,
+      geo)
+    val pb = GeoSchema.parseField(GeoParquet.read(spark, wkb, "b").schema("b"))
+    assert(pb.crs.contains("EPSG:3857"))
+    val native = foreignTable(
+      """SELECT st_aswkb(st_point(1.0, 2.0)) AS a,
+        |  st_tonative(st_geomfromwkt(concat('POINT Z (', CAST(id AS STRING), ' 3 4)')),
+        |    'point', 'xyz', 'interleaved') AS b FROM range(3)""".stripMargin,
+      geo)
+    val back = GeoParquet.readNative(spark, native, "b")
+    val pn = GeoSchema.parseField(back.schema("b"))
+    assert(pn.geometryType == 1 && pn.dims == 2 && pn.crs.contains("EPSG:3857"))
+    assert(back.selectExpr("st_aswkt(b)").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("POINT Z (0 3 4)", "POINT Z (1 3 4)", "POINT Z (2 3 4)"))
   }
 }

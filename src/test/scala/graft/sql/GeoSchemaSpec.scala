@@ -64,6 +64,37 @@ class GeoSchemaSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](parseMetadata("not json"))
   }
 
+  test("jsonMembers: decoded strings, raw objects, null apart from missing") {
+    import GeoSchema._
+    val m = jsonMembers(
+      s"""{ "s" : "a\\"b\\\\c\\u00e9" , "o":$Crs84Projjson, "a":[1, {"x":"]"}],
+         |"n":null, "num":-1.5e3, "t":true }""".stripMargin)
+    assert(m("s").contains("a\"b\\cé"))
+    assert(m("o").contains(Crs84Projjson)) // raw text, byte for byte
+    assert(m("a").contains("""[1, {"x":"]"}]"""))
+    assert(m("n").isEmpty && m.contains("n") && !m.contains("missing"))
+    assert(m("num").contains("-1.5e3") && m("t").contains("true"))
+    assert(jsonMembers("{}").isEmpty)
+    for (bad <- Seq("not json", "[1]", """{"a":1""", """{"a":1} x""", ""))
+      intercept[IllegalArgumentException](jsonMembers(bad))
+    // "crs": null is no crs, not the text "null"
+    assert(parseMetadata("""{"crs":null,"edges":"spherical"}""") ==
+      ((None, "spherical")))
+  }
+
+  test("crs with a control character survives withGeoMetadata -> parseField") {
+    import GeoSchema._
+    val crs = "AUTH:\u0001ctl\bb\ff"
+    val df = withGeoMetadata(geoms("POINT (1 2)"), "g", 1, 1, Some(crs))
+    assert(parseField(df.schema("g")).crs.contains(crs))
+  }
+
+  test("foreign metadata with \\b, \\f and \\/ escapes reads back") {
+    import GeoSchema._
+    assert(parseMetadata("""{"crs":"a\bb\fc\/dA"}""")._1
+      .contains("a\bb\fc/dA"))
+  }
+
   test("field metadata attach + parse (S1/S2)") {
     import GeoSchema._
     val df = withGeoMetadata(geoms("POINT Z (1 2 3)"), "g", 1, 2,
