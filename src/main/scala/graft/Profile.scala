@@ -11,8 +11,9 @@ import graft.pipeline.{Metrics, StageMetricsListener, StageRecord}
   * and explains each run from the engine's own stage events: one line per
   * completed stage (call site, tasks, executor run time, shuffle bytes,
   * submission→completion span) in submission order, so operator phases
-  * and kNN/CC rounds show up as the call sites of the code that actually
-  * ran, and the share of wall time the stages cover — the rest is driver
+  * show up as the call sites of the code that actually ran and the
+  * iterative loops' rounds as `<op> round <n>` (`knn`, `cc`, `kcore`,
+  * `pagerank`), and the share of wall time the stages cover — the rest is driver
   * time (analysis, optimization, planning, driver-side loops). Optionally
   * dumps `explain("formatted")` per query to `plans/r06/<query>_<tag>.txt`.
   *
@@ -106,7 +107,8 @@ object Profile {
     picked.foreach { name =>
       val fn = all.getOrElse(name, sys.error(s"unknown query $name"))
       // no job description is set: each SQL execution keeps its action's
-      // call site as its name, and StageMetricsListener names stages by it
+      // call site as its name (a loop round sets its own, `<op> round <n>`),
+      // and StageMetricsListener names stages by it
       val times = (0 until reps).map { _ =>
         val (_, run) = measure(spark) {
           try { fn(spark, sfDir).count() }

@@ -118,8 +118,13 @@ object Cluster {
 
     val labeled = coreLabels.withColumn("role", lit("core"))
       .unionByName(borderLabels.withColumn("role", lit("border")))
-    p.join(labeled, Seq("id"), "left")
+    // materialized, so the persisted frames can go: a lazy result would
+    // either keep them in the cache for the rest of the session or
+    // recompute the pair join when the caller runs it
+    val out = Rounds.materialize(p.join(labeled, Seq("id"), "left")
       .select(col("id"), coalesce(col("role"), lit("noise")).as("role"),
-        col("cluster"))
+        col("cluster")), "dbscan result")
+    Seq(p, pairs, cores, coreLabels).foreach(_.unpersist(blocking = false))
+    out
   }
 }

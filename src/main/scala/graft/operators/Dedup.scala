@@ -252,9 +252,8 @@ object Dedup {
     * id-sized pairs ever shuffle; the edge list persists across rounds
     * (re-derivation would re-execute the candidate pipeline per round);
     * each round's labels are checkpointed so one job runs per round.
-    * Convergence is detected STRUCTURALLY — an existence probe for any id
-    * whose label changed this round (an equi-join of consecutive label
-    * frontiers, short-circuited by `isEmpty`'s limit-1). Works for any id
+    * Convergence is detected STRUCTURALLY — the count of ids whose label
+    * changed, observed on the round's own materialization. Works for any id
     * type, unlike a numeric-sum potential, which silently declares
     * convergence after one round for non-numeric ids (cast -> NULL) or on
     * decimal overflow. Each round also pointer-jumps (every node adopts
@@ -271,9 +270,8 @@ object Dedup {
       .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-      .localCheckpoint(eager = true)
+    var labels = Rounds.materialize(edges.select(col("src").as("id"))
+      .distinct().withColumn("cluster", col("id")), "cc input")
     val clusterType = labels.schema("cluster").dataType
     var it = 0
     var converged = false
@@ -304,19 +302,13 @@ object Dedup {
           base.unionByName(
             jump.withColumn("__old", lit(null).cast(clusterType)))
         }
-      // convergence rides the checkpoint action itself (`observe` collects
-      // the changed-row count during the SAME job — guide §1.4/§2.4: the
-      // former filter+isEmpty probe was one extra job per round, ~10% of
-      // the loop's wall time on latency-bound tiny graphs)
-      val obs = org.apache.spark.sql.Observation()
-      val next = withJump
+      // convergence rides the round's materialization; an inflated
+      // changed-count never reads 0, so it is never confirmed
+      val (next, changed) = Rounds.counted(withJump
         .groupBy(col("id")).agg(min(col("cluster")).as("cluster"),
-          min(col("__old")).as("__old"))
-        .observe(obs, sum(when(col("cluster") === col("__old"), 0L)
-          .otherwise(1L)).as("__changed"))
-        .localCheckpoint(eager = true)
-      converged = Observations.observedLong(obs,
-        if (next.filter(col("cluster") =!= col("__old")).isEmpty) 0L else 1L) == 0L
+          min(col("__old")).as("__old")),
+        s"cc round $it", col("cluster") =!= col("__old"))(_ => false)
+      converged = changed == 0L
       labels = next.drop("__old")
       it += 1
     }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Link-graph signals for corpus curation. Web-scale pipelines weight
   * documents by their position in the link graph (domain/page authority);
@@ -29,9 +28,9 @@ import org.apache.spark.storage.StorageLevel
   * aggregation, partial map-side) plus an equi-join of edges to the rank
   * table on src — both standard hash exchanges on compact (long, long)
   * rows; no collect, no driver-side state. Iterations are a fixed small
-  * count (signals converge in a handful of damped rounds); each round's
-  * rank table is persisted and the previous one unpersisted, so lineage
-  * stays O(1). */
+  * count (signals converge in a handful of damped rounds), composed into
+  * one lazy plan with a checkpoint every few rounds, so lineage stays
+  * bounded. */
 object Graph {
 
   /** Per-node triangle counts over the undirected simple graph —
@@ -100,11 +99,10 @@ object Graph {
     *
     * Iterative peeling over the undirected simple graph (loops dropped,
     * both orientations deduped): each round removes every node whose
-    * CURRENT degree is < k, until no node drops. Rounds = peel depth;
-    * each round is one partial-aggregated degree count, a bounded
-    * existence probe, and two anti-joins — no driver-side data, O(1)
-    * lineage via persist/unpersist. A hub's degree only shrinks as its
-    * neighbors peel, so work decreases monotonically.
+    * CURRENT degree is < k, until no node drops. Rounds = peel depth + 1;
+    * each round is one action: a partial-aggregated degree count and two
+    * anti-joins — no driver-side data, O(1) lineage. A hub's degree only
+    * shrinks as its neighbors peel, so work decreases monotonically.
     *
     * Returns ("node") — the k-core members. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
@@ -116,36 +114,27 @@ object Graph {
       .where(s.isNotNull && d.isNotNull && s =!= d)
       .select(least(s, d).as("a"), greatest(s, d).as("b"))
       .distinct()
-    var e = und.select(col("a"), col("b"))
-      .union(und.select(col("b").as("a"), col("a").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    e.count()
+    var (e, n) = Rounds.counted(und.select(col("a"), col("b"))
+      .union(und.select(col("b").as("a"), col("a").as("b"))),
+      "kcore input", lit(true))(_ => false)
     var it = 0
     var done = false
     while (!done && it < maxIter) {
-      val deg = e.groupBy("a").agg(count(lit(1)).as("__d"))
-      val drop = deg.filter(col("__d") < k).select(col("a").as("__gone"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      done = drop.isEmpty
-      if (!done) {
-        val next = e
+      val drop = e.groupBy("a").agg(count(lit(1)).as("__d"))
+        .filter(col("__d") < k).select(col("a").as("__gone"))
+      // a round drops an edge iff it drops a node; an inflated kept count
+      // can fake "none dropped", which ends the peel, so that is confirmed
+      val (next, kept) = Rounds.counted(e
           .join(drop, e("a") === drop("__gone"), "left_anti")
-          .join(drop, e("b") === drop("__gone"), "left_anti")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        next.count()
-        e.unpersist()
-        e = next
-      }
-      drop.unpersist()
+          .join(drop, e("b") === drop("__gone"), "left_anti"),
+        s"kcore round $it", lit(true))(_ >= n)
+      done = kept >= n
+      e = next
+      n = kept
       it += 1
     }
     require(done, s"k-core peeling did not converge within $maxIter rounds")
-    // checkpoint before unpersisting: the core must not re-derive the
-    // whole anti-join chain once the cache is gone
-    val core = e.select(col("a").as("node")).distinct()
-      .localCheckpoint(eager = true)
-    e.unpersist()
-    core
+    Rounds.materialize(e.select(col("a").as("node")).distinct(), "kcore result")
   }
 
   /** @param edges  link table; one row per (src, dst) pair (dupes dropped)
@@ -160,25 +149,22 @@ object Graph {
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val outdeg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val base = scale * 3L / 20L
 
     // The iteration count is FIXED (no data-dependent control flow), so the
     // rounds compose into ONE lazy plan: each r_i feeds r_{i+1} exactly once
-    // (a straight-line DAG), the persisted e/nodes/outdeg are computed once
-    // inside the single final action, and the per-iteration
-    // persist+count+unpersist job pair — pure scheduling latency at any
-    // scale, one full extra pass over the rank table per round — is gone
-    // (guide §2.4: remove materialization barriers that buy nothing).
-    // Deep runs truncate the growing plan every `CheckpointEvery` rounds so
-    // planning time and lineage stay bounded.
+    // (a straight-line DAG), and the per-iteration persist+count+unpersist
+    // job pair — pure scheduling latency at any scale, one full extra pass
+    // over the rank table per round — is gone (guide §2.4: remove
+    // materialization barriers that buy nothing). e/nodes/outdeg are not
+    // persisted (ReusedExchange computes each once per plan; nothing stays
+    // cached). Deep runs truncate the growing plan every `CheckpointEvery`
+    // rounds so planning time and lineage stay bounded.
     val CheckpointEvery = 8
     var r = nodes.withColumn("rank", lit(scale))
     for (i <- 1 to iters) {
@@ -195,7 +181,7 @@ object Graph {
         .select(col("node"),
           (lit(base) + coalesce(col("in_mass"), lit(0L))).as("rank"))
       if (i % CheckpointEvery == 0 && i < iters)
-        r = r.localCheckpoint(eager = true)
+        r = Rounds.materialize(r, s"pagerank round $i")
     }
     r
   }

@@ -48,11 +48,10 @@ object Knn {
     Geo.register(points.sparkSession)
     require(startLevel >= 0 && startLevel <= 28)
     val pts = celled(points, "st_cellid", lit(startLevel))
-    val leveled = queries.select(col("qid"),
+    val leveled = Rounds.materialize(queries.select(col("qid"),
         col("qlon").cast("double").as("qlon"),
         col("qlat").cast("double").as("qlat"))
-      .withColumn("__lvl", lit(startLevel))
-      .localCheckpoint(eager = true)
+      .withColumn("__lvl", lit(startLevel)), "knn input")
     metersJoin(pts, leveled, Seq(startLevel), k, tieCols, onRound)
   }
 
@@ -116,7 +115,7 @@ object Knn {
     val lvlExpr = when(col("__scount").isNull, lit(SketchLevel))
       .otherwise(least(lit(MaxStartLevel), greatest(lit(0),
         floor(log2(lit(c2) / rQ)).cast("int"))))
-    val leveled = queries
+    val leveled = Rounds.materialize(queries
       .select(col("qid"), col("qlon").cast("double").as("qlon"),
         col("qlat").cast("double").as("qlat"))
       .withColumn("__scell", qcell)
@@ -125,8 +124,7 @@ object Knn {
       // would double the number of distinct level groups for no gain
       .withColumn("__lvl",
         (lvlExpr.cast("int") / 2).cast("int") * 2)
-      .drop("__scell", "__scount")
-      .localCheckpoint(eager = true)
+      .drop("__scell", "__scount"), "knn input")
     val levels = leveled.select(col("__lvl")).distinct()
       .collect().map(_.getInt(0)).sorted // bounded: ≤ MaxStartLevel/2+1
     metersJoin(pts, leveled, levels.toSeq, k, tieCols, onRound)
@@ -237,12 +235,12 @@ object Knn {
     * retired)` runs after each round that had open queries.
     *
     * One heavy job per round: the top-k (≤ k rows per open query) is
-    * checkpointed, and the retired count rides that checkpoint's action
-    * through `observe`; the finished rows and the next open set derive
-    * from the checkpoint, so the join+window executes exactly once per
-    * round and nothing re-executes when the final union is consumed. The
-    * open-set anti-join + checkpoint is skipped on rounds that retire
-    * nobody. */
+    * materialized by [[Rounds]], and the retired count rides that action;
+    * the finished rows and the next open set derive from the checkpoint,
+    * so the join+window executes exactly once per round and nothing
+    * re-executes when the final union is consumed. The next open set
+    * (retired qids anti-joined, entering queries added) is one counted
+    * checkpoint, skipped when nothing changes. */
   private def expand(pts: DataFrame, queries: DataFrame, schedule: Seq[Round],
                      dist: Column, distName: String, k: Int,
                      tieCols: Seq[String],
@@ -288,34 +286,35 @@ object Knn {
     val lastEntry = schedule.lastIndexWhere(_.enter.nonEmpty)
     var open: DataFrame = null
     var nOpen = 0L
+    var retiredSince = false // `open` lost queries since it was materialized
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var i = 0
     // stop after the last round, or once nobody is open and nobody enters
     while (i < schedule.size && (nOpen > 0 || i <= lastEntry)) {
       val round = schedule(i)
-      round.enter.foreach { cond =>
-        val entering = queries.filter(cond)
-        open = (if (open == null) entering else open.unionByName(entering))
-          .localCheckpoint(eager = true)
-        nOpen = open.count()
+      val label = s"knn round $i"
+      // one counted materialization per open-set change (some retired and
+      // some stay, or some enter); inflation only keeps the loop going
+      if (round.enter.nonEmpty || (retiredSince && nOpen > 0)) {
+        val (o, n) = Rounds.counted((Option(open) ++
+          round.enter.map(queries.filter)).reduce(_ unionByName _),
+          label, lit(true))(_ => false)
+        open = o
+        nOpen = n
+        retiredSince = false
       }
       if (nOpen > 0) {
-        val obs = org.apache.spark.sql.Observation()
-        val topk = roundTopk(open, round)
-          .observe(obs, sum(when(retired, 1L).otherwise(0L)).as("__ndone"))
-          .localCheckpoint(eager = true)
-        val nDone = Observations.observedLong(obs,
-          topk.filter(retired).count())
+        // all retired: the loop ends (so it is confirmed), or the next entry
+        // folds in the anti-join — a query an inflated count let go only
+        // skips rounds, each of which covers its radius by itself
+        val (topk, nDone) = Rounds.counted(roundTopk(open, round), label,
+          retired)(n => n >= nOpen && i >= lastEntry)
         if (nDone > 0) {
           parts += finished(topk)
-          nOpen -= nDone
-          // every open query retired: drop the set outright, or the next
-          // activation would union the retired qids back in
-          open =
-            if (nOpen > 0)
-              open.join(broadcast(topk.filter(retired).select(col("qid"))),
-                Seq("qid"), "left_anti").localCheckpoint(eager = true)
-            else null
+          open = open.join(broadcast(topk.filter(retired).select(col("qid"))),
+            Seq("qid"), "left_anti")
+          retiredSince = true
+          if (nDone >= nOpen) nOpen = 0L
         }
         if (onRound != null) onRound(i, nDone)
       }

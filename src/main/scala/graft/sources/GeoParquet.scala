@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.sql.{Geo, GeoSchema}
 
@@ -28,13 +29,19 @@ object GeoParquet {
             crs: Option[String] = Some(GeoSchema.Crs84Projjson)): Unit = {
     val spark = df.sparkSession
     Geo.register(spark)
-    val wkbDf = df.withColumn(geomCol, call_function("st_aswkb", col(geomCol)))
-    wkbDf.write.mode("overwrite").parquet(path)
-    // file-level bbox from the box aggregate (kernel K8); an empty or
-    // all-EMPTY frame has an infinite box, which JSON cannot hold — bbox is
-    // optional, so it is left out
-    val box = df.agg(call_function("st_box_agg", col(geomCol))).collect()(0)
-      .getStruct(0)
+    // the write and the bbox aggregate both read `df`: persist it (unless
+    // the caller already has) so its upstream plan runs once, not twice
+    val owned = df.storageLevel == StorageLevel.NONE
+    if (owned) df.persist(StorageLevel.MEMORY_AND_DISK)
+    val box = try {
+      df.withColumn(geomCol, call_function("st_aswkb", col(geomCol)))
+        .write.mode("overwrite").parquet(path)
+      // file-level bbox from the box aggregate (kernel K8); an empty or
+      // all-EMPTY frame has an infinite box, which JSON cannot hold — bbox
+      // is optional, so it is left out
+      df.agg(call_function("st_box_agg", col(geomCol))).collect()(0)
+        .getStruct(0)
+    } finally if (owned) df.unpersist(blocking = false)
     val bbox = (0 until 4).map(box.getDouble)
     val bboxJson =
       if (bbox.forall(_.isFinite)) bbox.mkString(""","bbox":[""", ",", "]") else ""
@@ -84,7 +91,7 @@ object GeoParquet {
       // repartitionByRange runs a SAMPLING pass before the write pass —
       // without this persist the upstream geometry kernels (envelope,
       // WKB encode, and whatever built the geometry) execute twice
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     keyed
       .repartitionByRange(col("__sort"))
       .sortWithinPartitions(col("__sort"))

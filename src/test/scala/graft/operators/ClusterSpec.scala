@@ -1,12 +1,16 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
   BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sql.GeoOps
@@ -139,17 +143,34 @@ class ClusterSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val pts = seededPoints(300, 20.0)
     val want = referenceDbscan(pts, 0.9, 3)
     // dbscan's result and the executed plan of its cached (ida, idb)
-    // pairs; each call partitions differently, so no cache is shared
+    // pairs, read off the actions dbscan runs (it returns a materialized
+    // result and drops its cache); each call partitions differently
     def pairsPlan(parts: Int): SparkPlan = {
-      val out = Cluster.dbscan(spark.createDataFrame(pts).toDF("id", "lon", "lat")
-        .repartition(parts), "id", "lon", "lat", 0.9, 3)
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.optimizedPlan)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val barrier = new graft.pipeline.StageMetricsListener
+      spark.listenerManager.register(listener)
+      spark.sparkContext.addSparkListener(barrier)
+      val out = try {
+        val out = Cluster.dbscan(spark.createDataFrame(pts).toDF("id", "lon", "lat")
+          .repartition(parts), "id", "lon", "lat", 0.9, 3)
+        assert(graft.pipeline.Metrics.awaitListener(spark, barrier))
+        out
+      } finally {
+        spark.listenerManager.unregister(listener)
+        spark.sparkContext.removeSparkListener(barrier)
+      }
       val got = out.collect().map(r => r.getLong(0) ->
         (r.getString(1), if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
       assert(got === want)
-      out.queryExecution.optimizedPlan.collectFirst {
+      plans.asScala.flatMap(_.collectFirst {
         case r: InMemoryRelation if r.output.map(_.name) == Seq("ida", "idb") =>
           r.cachedPlan
-      }.get
+      }).head
     }
     def generates(p: SparkPlan) = collect(p) { case g: GenerateExec => g }
     def check(p: SparkPlan): Seq[BroadcastHashJoinExec] = {

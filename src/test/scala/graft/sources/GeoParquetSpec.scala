@@ -273,4 +273,19 @@ class GeoParquetSpec extends AnyFunSuite {
     assert(back.selectExpr("st_aswkt(b)").collect().map(_.getString(0)).sorted.toSeq ==
       Seq("POINT Z (0 3 4)", "POINT Z (1 3 4)", "POINT Z (2 3 4)"))
   }
+
+  test("write computes its input once") {
+    Geo.register(spark)
+    val dir = java.nio.file.Files.createTempDirectory("geoparquet_once").toString
+    val rows = spark.sparkContext.longAccumulator("geoparquet_input_rows")
+    val bump = udf { (x: Long) => rows.add(1L); x.toDouble }
+    val df = spark.range(0, 100, 1, 4).select(col("id"),
+      call_function("st_point", bump(col("id")), lit(1.0)).as("geom"))
+    GeoParquet.write(df, "geom", dir)
+    assert(rows.value == 100L)
+    assert(spark.read.parquet(dir).count() == 100L)
+    assert(!df.storageLevel.useMemory, "write left its input cached")
+    // the bbox still reaches the footer
+    assert(GeoParquet.geoMetadataJson(dir).exists(_.contains(""""bbox":[0.0,1.0,99.0,1.0]""")))
+  }
 }
